@@ -5,6 +5,8 @@ composite_pk_t / dropped_table)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -251,11 +253,13 @@ def test_ir_json_roundtrip(plan):
 REF_RULES = "/root/reference/rules"
 
 
-@pytest.mark.skipif(not __import__("os").path.isdir(REF_RULES), reason="reference not present")
+@pytest.mark.skipif(not os.path.isdir(REF_RULES), reason="reference not present")
 def test_reference_rule_files_golden():
     """Parity pin: the engine consumes the reference's OWN rule files
     (mysql_to_psql.json, mysql_raw_dump.json) unmodified and reproduces
-    the §1.2 type-conversion table and the dump-function dispatch.
+    the §1.2 type-conversion table and the dump-function dispatch, and
+    the bundled rules/defaults.MYSQL_RAW_DUMP compiles to the same
+    dispatch as the reference's mysql_raw_dump.json.
     (schema_changes.json is a sample with a trailing comma — invalid
     strict JSON even for the reference's own json.load — so the
     schema-change shape is covered by the fixture tests above instead.)
@@ -263,6 +267,7 @@ def test_reference_rule_files_golden():
     import json
 
     from mysql2psql_spark import schema_ir as ir
+    from mysql2psql_spark.rules.defaults import MYSQL_RAW_DUMP
     from mysql2psql_spark.rules.handler import apply_node_rules, compile_dump_plan
 
     with open(f"{REF_RULES}/mysql_to_psql.json") as f:
@@ -300,19 +305,22 @@ def test_reference_rule_files_golden():
     assert dispatch["bin"] == ["makeItEmpty"]
     assert dispatch["created"] == ["notNullableDatetime"]
     assert dispatch["fk"] == ["refToNullable"]
+    assert compile_dump_plan(schema["tables"]["t"], MYSQL_RAW_DUMP) == dispatch
 
 
 def test_dump_rules_compose_in_sequence(spark):
     """A nullable FK datetime column matches BOTH notNullableDatetime and
     refToNullable; the reference applies every match in rule order
-    (PsqlParser.py:200-214), not first-match-wins."""
+    (PsqlParser.py:200-214), not first-match-wins. The rules are the
+    bundled rules/defaults.MYSQL_RAW_DUMP, the engine default that
+    plan_migration falls back to (plans/migration.py:106); the
+    reference's own mysql_raw_dump.json is checked too where present."""
     import json
 
     from mysql2psql_spark import schema_ir as ir
+    from mysql2psql_spark.rules.defaults import MYSQL_RAW_DUMP
     from mysql2psql_spark.rules.handler import compile_dump_plan, dump_expression
 
-    with open(f"{REF_RULES}/mysql_raw_dump.json") as f:
-        dump_rules = json.load(f)
     table = ir.new_table(
         "t",
         [
@@ -322,8 +330,14 @@ def test_dump_rules_compose_in_sequence(spark):
             ),
         ],
     )
-    dispatch = compile_dump_plan(table, dump_rules)
+    dispatch = compile_dump_plan(table, MYSQL_RAW_DUMP)
     assert dispatch["fk_created"] == ["notNullableDatetime", "refToNullable"]
+
+    ref = f"{REF_RULES}/mysql_raw_dump.json"
+    if os.path.isfile(ref):
+        with open(ref) as f:
+            ref_dispatch = compile_dump_plan(table, json.load(f))
+        assert ref_dispatch["fk_created"] == ["notNullableDatetime", "refToNullable"]
 
     # and the composed expression evaluates both conversions in order:
     # zero-datetime -> NULL (stays NULL through refToNullable), '0' -> NULL
