@@ -1237,38 +1237,17 @@ def dedup_leakage_safe_split(
 
 
 # ---------------------------------------------------------------------------
-# QUEUED (r14 registration): the streaming near-dup gate as driver-visible
-# evidence (VERDICT r12 #5, the m4_cdc_apply promotion pattern) — run
-# streaming/docs.py::near_dup_gate_foreach_batch in BATCH MODE (the
-# foreachBatch closure invoked on two deterministic micro-batch
-# partitions of the new docs, writes to the session scratch root), read
-# the compacted batch_id-versioned output back, and compare it to the
-# oracle-green batch twin (dedup_minhash_incremental) as ONE summary
-# row. The gate is stateless per trigger (new x corpus only — never
-# new x new), so streamed == batch BY CONSTRUCTION: only_stream /
-# only_batch / value_mismatches are 0 and a red driver row means the
-# micro-batch decomposition broke (the union-over-triggers premise the
-# real readStream equivalence test pins in tests/test_streaming.py::
-# test_near_dup_gate_stream_matches_batch_twin).
+# The streaming near-dup gate's streamed-equals-batch audit row
+# (streaming/audit.py::stream_batch_audit): streaming/docs.py::
+# near_dup_gate_foreach_batch runs on the new docs (doc_id % 10 >= 8) in
+# two doc_id-parity micro-batches, and its pair partials are compared to
+# the batch twin, the same new x corpus probe in one shot. The gate is
+# stateless per trigger (new x corpus, never new x new), so the pair set
+# is the union over triggers for any split.
 #
-# Scale shape: per-trigger cost is the batch operator's (band
-# collisions against the standing corpus tables, built ONCE at gate
-# construction — the r13 per-trigger cache-release fix); the equality
-# audit is a full-outer join of two pair lists (pair-graph-sized, both
-# sides broadcastable by construction). The only files written are
-# batch_id-versioned parquet under the session-scoped mkdtemp scratch
-# (atexit-cleaned, the ensure_bucketed_table discipline).
-#
-# r13 verification record (the queue contract): DuckDB-exact under a
-# vanilla session at sf0.001 (12 pairs) and sf0.01 (6 pairs, the driver
-# gate scale); at sf0.1 the oracle embeds the all-pairs cross join
-# (driver-gate-only, the dedup_recall_gate discipline), so sf0.1 is
-# verified Spark-side: 78 == 78 pairs, zero asymmetry/mismatches.
-# Engine-session interleaved median 3.65 s at sf0.1 (loadavg 6-8,
-# control dedup_minhash_incremental at its 1.394 s floor in the same
-# session) — the wall is the two trigger jobs + write/read-back, not
-# data volume. 5x replica probe: x1.5 wall at x5 docs with x25 output
-# (78 -> 1950 pairs) — trigger cost is band-collision-bounded.
+# Scale shape: per-trigger cost is the batch operator's band collisions
+# against the corpus banding tables, built once and shared by both
+# triggers and the twin; the audit join is pair-list sized.
 # ---------------------------------------------------------------------------
 _ORACLE_STREAM_GATE = f"""
     WITH sh AS ({_SHINGLE_SQL}),
@@ -1295,142 +1274,50 @@ _ORACLE_STREAM_GATE = f"""
 def stream_near_dup_gate(
     spark: SparkSession, sf_dir: str, caches=None
 ) -> DataFrame:
-    """Streamed-equals-batch summary for the foreachBatch near-dup gate —
-    see the block above. The two micro-batches split the new docs by
-    doc_id parity (the test_streaming.py decomposition); writes are
-    idempotent (mode=overwrite per batch dir), so a re-entrant call in
-    the same session just overwrites its own previous output."""
-    import os
-    import sys
-
-    from pyspark.sql import types as T
-
+    """Streamed-equals-batch audit for the foreachBatch near-dup gate —
+    see the block above. The corpus banding tables are registered on
+    ``caches`` when one is given."""
     from mysql2psql_spark.operators.dedup import (
         _minhash_tables,
         minhash_lsh_cross_pairs,
     )
-    from mysql2psql_spark.operators.layout import session_scratch
+    from mysql2psql_spark.streaming.audit import audit_dir, stream_batch_audit
     from mysql2psql_spark.streaming.docs import near_dup_gate_foreach_batch
-
-    # Env-gated phase timing (SPARK_GRAFT_GATE_DEBUG=1): zero-cost when
-    # off; exists because full-bench sessions sporadically read this
-    # query at 10-50 s vs its ~3.3 s isolated floor (r17 continuation
-    # session) and the blow-up never reproduces in isolation — the
-    # phase prints attribute the stall when it does fire.
-    import time as _time
-
-    _dbg = bool(os.environ.get("SPARK_GRAFT_GATE_DEBUG"))
-    _t0 = _time.perf_counter()
-    _last = [_t0]
-
-    def _mark(label: str) -> None:
-        # per-phase delta + cumulative (ADVICE r17: a single firing
-        # should attribute the stall without manual subtraction)
-        if _dbg:
-            now = _time.perf_counter()
-            print(
-                f"## near_dup_gate phase {label}: "
-                f"+{now - _last[0]:.3f}s (t={now - _t0:.3f}s)",
-                file=sys.stderr,
-                flush=True,
-            )
-            _last[0] = now
 
     d = load_table(spark, sf_dir, "documents")
     new = d.filter(F.col("doc_id") % 10 >= 8)
     corpus_sh = shingle_hash_table(d.filter(F.col("doc_id") % 10 < 8))
-    # ONE corpus banding build shared by both triggers AND the batch
-    # twin — the standing-ingest-artifact shape, and one persisted
-    # corpus frame instead of two. Timing-NEUTRAL at sf0.1 (interleaved
-    # A/B r13: 3.71 s separate vs 3.65 s shared, control at floor):
-    # the wall is dominated by the two foreachBatch trigger jobs
-    # (write + read-back), not the ~4k-doc corpus aggregation.
-    # doc-scaled widths for the per-doc array tables (r18, guide §2.5 —
-    # see _doc_table_parts): corpus AND per-trigger batch builds
     parts = _doc_table_parts(spark, sf_dir)
     corpus_tables = _minhash_tables(corpus_sh, n_parts=parts)
-    # seat the shared corpus banding build with one action (it feeds
-    # both triggers and the batch twin; the seat also keeps the first
-    # trigger's measured cost honest)
+    # seat the shared corpus banding build before either side probes it
     corpus_tables[0].count()
-    _mark("corpus_seat")
     if caches is not None:
         caches.append(corpus_tables[0])
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out_dir = os.path.join(session_scratch(spark), f"stream_gate_{sf_tag}")
-    gate = near_dup_gate_foreach_batch(
-        None, out_dir, caches=caches, corpus_tables=corpus_tables, n_parts=parts
-    )
-    # The batch twin runs SERIALLY after the two triggers (r18 revert of
-    # the r17 §2.6 thread overlap, VERDICT r17 #1): with the twin on a
-    # background thread this query runs up to three concurrent 32-task
-    # stages, and on this host that concurrency level sporadically
-    # stalls every in-flight task ~8x — the row read 19.7/6.7 s in the
-    # r18 baseline bench, 13.7/22.8/4.8 s across three instrumented
-    # full-headline probe passes (phase marks: the stall lands inside
-    # trigger0/trigger1 while the twin overlaps them; serial reps read
-    # a 3.3-3.5 s floor), and 4.40/5.14 s in the two r17 close
-    # artifacts vs its 3.44 s pre-overlap baseline. The overlap's own
-    # isolated A/B claimed only 3.44 -> 3.31; the stall it induces in
-    # full-bench sessions costs multiples of that. Trigger ordering was
-    # always sequential (audit contract); now the twin is too.
-    from mysql2psql_spark.operators.materialize import materialize
 
-    pair_schema = T.StructType(
-        [
-            T.StructField("doc_new", T.LongType()),
-            T.StructField("doc_corpus", T.LongType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
-    gate(new.filter(F.col("doc_id") % 2 == 0), 0)
-    _mark("trigger0")
-    gate(new.filter(F.col("doc_id") % 2 == 1), 1)
-    _mark("trigger1")
-    batch = materialize(
-        minhash_lsh_cross_pairs(
+    return stream_batch_audit(
+        spark,
+        "stream_near_dup_gate",
+        audit_dir(spark, "stream_gate", sf_dir),
+        new,
+        "doc_id",
+        make_gate=lambda out_dir, _lineage: near_dup_gate_foreach_batch(
+            None, out_dir, corpus_tables=corpus_tables, n_parts=parts
+        ),
+        # explicit schema so an all-empty trigger's output dir still reads
+        read=lambda out_dir: spark.read.schema(
+            "doc_new bigint, doc_corpus bigint, jaccard double"
+        ).parquet(f"{out_dir}/batch=*"),
+        twin=lambda: minhash_lsh_cross_pairs(
             shingle_hash_table(new),
             None,
             threshold=0.5,
             caches=caches,
             corpus_tables=corpus_tables,
             n_parts=parts,
-        )
-    )
-    batch.count()
-    _mark("twin_built")
-    # explicit schema so an all-empty trigger's output dir still reads
-    streamed = spark.read.schema(pair_schema).parquet(f"{out_dir}/batch=*")
-    _mark("streamed_read_plan")
-    s = streamed.select("doc_new", "doc_corpus", F.col("jaccard").alias("j_s"))
-    b = batch.select("doc_new", "doc_corpus", F.col("jaccard").alias("j_b"))
-    j = s.join(b, ["doc_new", "doc_corpus"], "full_outer")
-    return j.agg(
-        F.count(F.col("j_s")).cast("bigint").alias("stream_pairs"),
-        F.count(F.col("j_b")).cast("bigint").alias("batch_pairs"),
-        F.sum(F.when(F.col("j_b").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("only_stream"),
-        F.sum(F.when(F.col("j_s").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("only_batch"),
-        F.sum(
-            F.when(
-                F.col("j_s").isNotNull()
-                & F.col("j_b").isNotNull()
-                & (F.col("j_s") != F.col("j_b")),
-                1,
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("value_mismatches"),
-    ).select(
-        F.lit(2).cast("bigint").alias("n_triggers"),
-        "stream_pairs",
-        "batch_pairs",
-        "only_stream",
-        "only_batch",
-        "value_mismatches",
+        ),
+        keys=["doc_new", "doc_corpus"],
+        vals=["jaccard"],
+        count="pairs",
     )
 
 
@@ -1487,46 +1374,18 @@ def dedup_clusters_incremental(
     )
     from mysql2psql_spark.operators.materialize import materialize
 
-    # Env-gated phase timing (SPARK_GRAFT_GATE_DEBUG=1, the
-    # stream_near_dup_gate instrumentation twin): this row sporadically
-    # reads 10-16 s in full-bench sessions vs its ~2.5 s floor (r17
-    # continuation session; r18 baseline passes 1/3) and never in
-    # isolation — the marks attribute the stall when it fires.
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_GATE_DEBUG"))
-    _t0 = _time.perf_counter()
-    _last = [_t0]
-
-    def _mark(label: str) -> None:
-        if _dbg:
-            now = _time.perf_counter()
-            print(
-                f"## clusters_incremental phase {label}: "
-                f"+{now - _last[0]:.3f}s (t={now - _t0:.3f}s)",
-                file=_sys.stderr,
-                flush=True,
-            )
-            _last[0] = now
-
     pairs = materialize(
         dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     )
     if caches is not None:
         caches.append(pairs)
-    _mark("pairs_plan")
     both_old = (F.col("doc_a") % 10 < 8) & (F.col("doc_b") % 10 < 8)
     cc_old = materialize(connected_components(pairs.filter(both_old)))
-    _mark("cc_old_built")
     if caches is not None:
         caches.append(cc_old)
-    out = connected_components_incremental(
+    return connected_components_incremental(
         cc_old, pairs.filter(~both_old), caches=caches
     )
-    _mark("incremental_tail")
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -1207,40 +1207,17 @@ def profile_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# QUEUED (r15 registration per the window budget): the streaming drift
-# gate as driver-visible evidence (VERDICT r13 #5 — the
-# stream_near_dup_gate promotion pattern): run streaming/events.py::
-# drift_counts_foreach_batch in BATCH MODE (the foreachBatch closure
-# invoked on two deterministic event_id-parity micro-batches with the
-# bounds FROZEN over the full window, partials written batch_id-
-# versioned under the session scratch root), read the compacted summary
-# back via read_drift_summary, and audit it against the oracle-green
-# batch twin (profile_drift_psi) as ONE row. Counts are associative and
-# the PSI tail is a deterministic function of the summed counts, so
-# streamed == batch BIT-FOR-BIT for ANY micro-batch partitioning of the
-# same rows — a red driver row means the count decomposition broke (the
-# premise tests/test_streaming.py pins through a real two-trigger
-# readStream).
+# The streaming PSI drift gate's streamed-equals-batch audit row
+# (streaming/audit.py::stream_batch_audit): streaming/events.py::
+# drift_counts_foreach_batch runs on two event_id-parity micro-batches
+# with the bounds frozen over the full window, and the summary
+# read_drift_summary compacts is compared to the batch twin,
+# profile_drift_psi, on all five value columns. Counts are associative
+# and the PSI tail is a function of the summed counts, so streamed ==
+# batch for any split of the same rows.
 #
 # Scale shape: per-trigger cost is one batch-sized scan reduced to a
-# bucket-sized count partial (map-side combined); the audit join is
-# bucket-sized x bucket-sized. The only files written are the
-# batch_id-versioned parquet partials under the session-scoped mkdtemp
-# scratch (atexit-cleaned). Both sides of the audit reuse the SAME
-# drift_psi_tail, so the comparison is NULL-safe-exact on all five
-# value columns, not approximate.
-#
-# r14 verification record (the queue contract): DuckDB-exact under a
-# vanilla session at sf0.001/sf0.01/sf0.1 (1 row each; rendered hashes
-# identical Spark-vs-oracle at all three); the real readStream
-# equivalence + replayed-trigger idempotency + one-period partial-
-# profile reads are pinned in tests/test_streaming.py, the fresh-
-# lineage-over-stale-out_dir refusal too, and the sf0.001/sf0.01
-# differential in tests/test_operators.py. 5x events replica probe:
-# x1.2 wall (count partials are bucket-sized; the wall is the two
-# trigger jobs + write/read-back, not data volume). First 7-rep
-# interleaved median 2.15 s at sf0.1 (loadavg 2-7, control
-# profile_drift_psi at 1.17x its floor in the same reps).
+# bucket-sized count partial; the audit join is bucket-sized.
 # ---------------------------------------------------------------------------
 _ORACLE_STREAM_DRIFT = f"""
     WITH psi AS ({_ORACLE_DRIFT_PSI})
@@ -1257,14 +1234,9 @@ _ORACLE_STREAM_DRIFT = f"""
 @query("stream_drift_summary", oracle=_ORACLE_STREAM_DRIFT)
 def stream_drift_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streamed-equals-batch audit for the foreachBatch PSI drift gate —
-    see the block above. The two micro-batches split events by event_id
-    parity (the test_streaming.py decomposition); partial writes are
-    idempotent (mode=overwrite per batch dir), so a re-entrant call in
-    the same session overwrites its own previous output."""
-    import os
-
+    see the block above."""
     from mysql2psql_spark.operators.drift import drift_bounds
-    from mysql2psql_spark.operators.layout import session_scratch
+    from mysql2psql_spark.streaming.audit import audit_dir, stream_batch_audit
     from mysql2psql_spark.streaming.events import (
         drift_counts_foreach_batch,
         read_drift_summary,
@@ -1272,83 +1244,20 @@ def stream_drift_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     ep = epoch_of(e)
-    ev = e.select(ep("ts").alias("et"), "event_type", "value")
-    bounds = drift_bounds(ev)  # FROZEN over the full window, both arms
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out_dir = os.path.join(session_scratch(spark), f"stream_drift_{sf_tag}")
-    # each invocation is a FRESH query lineage (ids restart at 0), so
-    # rotate the partial dir with it — the exact out_dir/checkpoint
-    # coupling the gate's batch-0 guard enforces (a re-entrant call
-    # would otherwise be refused as a stale-partial overwrite)
-    import shutil
-    import uuid
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    # the lineage token rotates WITH the lineage (r16, ADVICE): a
-    # per-invocation uuid, not the fixed out_dir — a token equal to the
-    # output path is vacuous for any two lineages sharing that path
-    # (the marker then never mismatches), and in a real readStream the
-    # natural token is the checkpointLocation string
-    gate = drift_counts_foreach_batch(
-        bounds, out_dir, lineage=f"stream_drift_summary:{uuid.uuid4()}"
-    )
-    # batch twin overlaps the trigger jobs — same §2.6 shape (and A/B
-    # evidence class) as stream_ks_summary above; triggers themselves
-    # stay strictly sequential per the audit contract
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    from mysql2psql_spark.operators.materialize import materialize
-
-    @inheritable_thread_target
-    def _twin():
-        fr = materialize(profile_drift_psi(spark, sf_dir))
-        fr.count()
-        return fr
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(_twin)
-        gate(e.filter(F.col("event_id") % 2 == 0), 0)
-        gate(e.filter(F.col("event_id") % 2 == 1), 1)
-        streamed = read_drift_summary(spark, out_dir)
-        batch = fut.result()
-    vals = ["n_a", "n_b", "share_a", "share_b", "psi_term"]
-    s = streamed.select(
-        "dim", "bucket", *[F.col(v).alias(f"s_{v}") for v in vals]
-    )
-    b = batch.select(
-        "dim", "bucket", *[F.col(v).alias(f"b_{v}") for v in vals]
-    )
-    j = s.join(b, ["dim", "bucket"], "full_outer")
-    eq = None
-    for v in vals:
-        c = F.col(f"s_{v}").eqNullSafe(F.col(f"b_{v}"))
-        eq = c if eq is None else (eq & c)
-    return j.agg(
-        F.count(F.col("s_n_a")).cast("bigint").alias("stream_rows"),
-        F.count(F.col("b_n_a")).cast("bigint").alias("batch_rows"),
-        F.sum(F.when(F.col("b_n_a").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("only_stream"),
-        F.sum(F.when(F.col("s_n_a").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("only_batch"),
-        F.sum(
-            F.when(
-                F.col("s_n_a").isNotNull() & F.col("b_n_a").isNotNull() & ~eq,
-                1,
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("value_mismatches"),
-    ).select(
-        F.lit(2).cast("bigint").alias("n_triggers"),
-        "stream_rows",
-        "batch_rows",
-        "only_stream",
-        "only_batch",
-        "value_mismatches",
+    bounds = drift_bounds(e.select(ep("ts").alias("et"), "event_type", "value"))
+    return stream_batch_audit(
+        spark,
+        "stream_drift_summary",
+        audit_dir(spark, "stream_drift", sf_dir),
+        e,
+        "event_id",
+        make_gate=lambda out_dir, lineage: drift_counts_foreach_batch(
+            bounds, out_dir, lineage=lineage
+        ),
+        read=lambda out_dir: read_drift_summary(spark, out_dir),
+        twin=lambda: profile_drift_psi(spark, sf_dir),
+        keys=["dim", "bucket"],
+        vals=["n_a", "n_b", "share_a", "share_b", "psi_term"],
     )
 
 
@@ -1480,42 +1389,17 @@ def events_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r16 (queued r15): the CDC sink as
-# driver-visible evidence (VERDICT r14 #5, the stream_drift_summary /
-# stream_near_dup_gate promotion pattern — after which every
-# foreachBatch gate in the engine has an oracled audit row): run
-# streaming/events.py::cdc_foreach_batch_sink in BATCH MODE on two
-# deterministic event_id-parity micro-batches (batch_id-versioned
-# idempotent writes under the session scratch root), resolve the
-# partitioned changelog with compact_cdc_log, and audit it against the
-# oracle-green batch twin (m4_cdc_apply) as ONE row. The changelog
-# resolution (latest op per key, tombstones drop the key) is a pure
-# function of the row SET — independent of the micro-batch partitioning
-# — so streamed == batch bit-for-bit; a red driver row means the
-# write-idempotence or the compaction window broke (the premise
-# tests/test_streaming.py pins through a real readStream).
+# The exactly-once CDC sink's streamed-equals-batch audit row
+# (streaming/audit.py::stream_batch_audit): streaming/events.py::
+# cdc_foreach_batch_sink writes two event_id-parity micro-batches,
+# compact_cdc_log resolves the changelog (latest op per key, tombstones
+# drop the key), and the result is compared to the batch twin,
+# m4_cdc_apply. The resolution is a function of the row set alone, so
+# streamed == batch for any split.
 #
-# Scale shape: per-trigger cost is one batch-sized parquet write (the
-# sink is write-only — no per-trigger compute); the compaction is ONE
-# key-hash exchange with a history-sized per-key sort (m4's shape); the
-# audit join is |users| x |users| on the key. Files land under the
-# session-scoped mkdtemp scratch (atexit-cleaned).
-#
-# r15 verification record (the queue contract): DuckDB-exact under a
-# vanilla session at sf0.001/sf0.01/sf0.1 (1 row each; rendered hashes
-# identical Spark-vs-oracle at all three — see the session log); the
-# real readStream round-trip + replayed-trigger idempotence of the sink
-# are pinned in tests/test_streaming.py (pre-existing), the audit row's
-# differential + a planted-divergence direction pin (a dropped partial
-# MUST diverge the compacted state) in tests/test_operators.py. 5x
-# events replica probe: wall FLAT at 5x rows (5x median 1.67 s vs 1x
-# 2.48 s in the same session — the trigger-job fixed overhead dominates
-# and the 5x write volume stays off the critical path at this scale;
-# the compaction exchange is the only component that grows, linearly).
-# First 7-rep median 2.480 s at sf0.1 (loadavg ~1.5, control
-# m4_cdc_apply at 0.425 s in the same session) — the wall is the two
-# trigger writes + read-back, the stream_near_dup_gate class; samples
-# spread 1.5-3.4 s (write-jitter-bound, same as that gate).
+# Scale shape: per-trigger cost is one batch-sized parquet write; the
+# compaction is one key-hash exchange with a per-key history sort; the
+# audit join is users x users on the key.
 # ---------------------------------------------------------------------------
 _ORACLE_STREAM_CDC = """
     WITH cur AS (
@@ -1546,90 +1430,27 @@ _ORACLE_STREAM_CDC = """
 @query("stream_cdc_apply_summary", oracle=_ORACLE_STREAM_CDC)
 def stream_cdc_apply_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streamed-equals-batch audit for the exactly-once CDC sink — see
-    the block above. The two micro-batches split events by event_id
-    parity; sink writes are idempotent (mode=overwrite per batch dir),
-    so a re-entrant call in the same session overwrites its own
-    previous output."""
-    import os
-    import shutil
-    import uuid
-
-    from mysql2psql_spark.operators.layout import session_scratch
+    the block above."""
     from mysql2psql_spark.queries.migration_q import m4_cdc_apply
+    from mysql2psql_spark.streaming.audit import audit_dir, stream_batch_audit
     from mysql2psql_spark.streaming.events import (
         cdc_foreach_batch_sink,
         compact_cdc_log,
     )
 
-    e = load_table(spark, sf_dir, "events")
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out_dir = os.path.join(session_scratch(spark), f"stream_cdc_{sf_tag}")
-    # each invocation is a fresh query lineage (ids restart at 0):
-    # rotate the partial dir with it, the out_dir/checkpoint coupling;
-    # the sink carries the shared lineage guard (r16, ADVICE) with a
-    # per-invocation uuid token
-    shutil.rmtree(out_dir, ignore_errors=True)
-    sink = cdc_foreach_batch_sink(
-        out_dir, lineage=f"stream_cdc_apply_summary:{uuid.uuid4()}"
-    )
-    # batch twin overlaps the trigger jobs — same §2.6 shape (and A/B
-    # evidence class) as stream_ks_summary; triggers stay sequential
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    from mysql2psql_spark.operators.materialize import materialize
-
-    @inheritable_thread_target
-    def _twin():
-        fr = materialize(m4_cdc_apply(spark, sf_dir))
-        fr.count()
-        return fr
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(_twin)
-        sink(e.filter(F.col("event_id") % 2 == 0), 0)
-        sink(e.filter(F.col("event_id") % 2 == 1), 1)
-        streamed = compact_cdc_log(spark, out_dir)
-        batch = fut.result()
-    vals = ["last_event_type", "cur_value", "last_ts"]
-    s = streamed.select(
-        "user_id", *[F.col(v).alias(f"s_{v}") for v in vals]
-    )
-    b = batch.select(
-        "user_id", *[F.col(v).alias(f"b_{v}") for v in vals]
-    )
-    j = s.join(b, ["user_id"], "full_outer")
-    eq = None
-    for v in vals:
-        c = F.col(f"s_{v}").eqNullSafe(F.col(f"b_{v}"))
-        eq = c if eq is None else (eq & c)
-    return j.agg(
-        F.count(F.col("s_last_ts")).cast("bigint").alias("stream_rows"),
-        F.count(F.col("b_last_ts")).cast("bigint").alias("batch_rows"),
-        F.sum(F.when(F.col("b_last_ts").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("only_stream"),
-        F.sum(F.when(F.col("s_last_ts").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("only_batch"),
-        F.sum(
-            F.when(
-                F.col("s_last_ts").isNotNull()
-                & F.col("b_last_ts").isNotNull()
-                & ~eq,
-                1,
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("value_mismatches"),
-    ).select(
-        F.lit(2).cast("bigint").alias("n_triggers"),
-        "stream_rows",
-        "batch_rows",
-        "only_stream",
-        "only_batch",
-        "value_mismatches",
+    return stream_batch_audit(
+        spark,
+        "stream_cdc_apply_summary",
+        audit_dir(spark, "stream_cdc", sf_dir),
+        load_table(spark, sf_dir, "events"),
+        "event_id",
+        make_gate=lambda out_dir, lineage: cdc_foreach_batch_sink(
+            out_dir, lineage=lineage
+        ),
+        read=lambda out_dir: compact_cdc_log(spark, out_dir),
+        twin=lambda: m4_cdc_apply(spark, sf_dir),
+        keys=["user_id"],
+        vals=["last_event_type", "cur_value", "last_ts"],
     )
 
 
@@ -1724,33 +1545,17 @@ def events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REGISTERED r16 (queued r15): the KS gate as
-# driver-visible evidence — keeping the invariant the r15 CDC queue
-# entry restored: EVERY foreachBatch gate carries an oracled audit row
-# (stream_near_dup_gate / stream_drift_summary / stream_cdc_apply_
-# summary pattern). Run streaming/events.py::ks_counts_foreach_batch in
-# BATCH MODE on two event_id-parity micro-batches with the bounds
-# FROZEN over the full window, read the compacted statistic back via
-# read_ks_summary, and audit it against the oracle-exact batch twin
-# (events_ks_drift) as ONE row. (key, value, period) counts are
-# associative and ks_tail is deterministic in the summed counts, so
-# streamed == batch BIT-FOR-BIT for ANY micro-batch partitioning —
-# tests pin it under a real two-trigger readStream AND a time-ordered
-# split (a different partitioning than this query's parity split).
+# The streaming KS gate's streamed-equals-batch audit row
+# (streaming/audit.py::stream_batch_audit): streaming/events.py::
+# ks_counts_foreach_batch runs on two event_id-parity micro-batches with
+# the bounds frozen over the full window, and the statistic
+# read_ks_summary compacts is compared to the batch twin,
+# events_ks_drift. (key, value, period) counts are associative and
+# ks_tail is a function of the summed counts, so streamed == batch for
+# any split.
 #
 # Scale shape: per-trigger cost is one batch-sized scan reduced to a
-# distinct-value-sized count partial (map-side combined); the audit
-# join is n_types x n_types. Lineage-marker protocol inherited through
-# the shared versioned-partial guard.
-#
-# r15 verification record (the queue contract): DuckDB-exact under a
-# vanilla session at sf0.001/sf0.01/sf0.1 (1 row each); streamed
-# equivalence, replayed-trigger idempotency, mid-stream one-period
-# partial (ks_num = 0, defined), and foreign-lineage refusal pinned in
-# tests/test_streaming.py. Probe/floor: the two trigger jobs dominate
-# (the stream_drift_summary class; KS partials are value-table-sized
-# rather than bucket-sized, still sublinear) — first 7-rep median
-# 2.454 s at sf0.1 (loadavg ~1.7).
+# distinct-value-sized count partial; the audit join is types x types.
 # ---------------------------------------------------------------------------
 _ORACLE_STREAM_KS = f"""
     WITH ks AS ({_ORACLE_KS_DRIFT})
@@ -1767,15 +1572,8 @@ _ORACLE_STREAM_KS = f"""
 @query("stream_ks_summary", oracle=_ORACLE_STREAM_KS)
 def stream_ks_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streamed-equals-batch audit for the foreachBatch KS gate — see
-    the block above. The two micro-batches split events by event_id
-    parity; partial writes are idempotent (mode=overwrite per batch
-    dir) and the lineage token is a per-invocation uuid, rotated with
-    the partial dir."""
-    import os
-    import shutil
-    import uuid
-
-    from mysql2psql_spark.operators.layout import session_scratch
+    the block above."""
+    from mysql2psql_spark.streaming.audit import audit_dir, stream_batch_audit
     from mysql2psql_spark.streaming.events import (
         ks_counts_foreach_batch,
         read_ks_summary,
@@ -1786,74 +1584,17 @@ def stream_ks_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = e.select(ep("ts").alias("et")).agg(
         F.min("et").alias("mn"), F.max("et").alias("mx")
     )
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out_dir = os.path.join(session_scratch(spark), f"stream_ks_{sf_tag}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    # per-invocation uuid lineage token (r16, ADVICE — never the fixed
-    # out_dir, which makes the marker mismatch vacuous)
-    gate = ks_counts_foreach_batch(
-        bounds, out_dir, lineage=f"stream_ks_summary:{uuid.uuid4()}"
-    )
-    # The batch twin is INDEPENDENT of the trigger sequence (it never
-    # reads the gate's partials), so it computes on a background thread
-    # while the two triggers run their jobs (guide §2.6) — the trigger
-    # ordering itself stays strictly sequential, as the audit contract
-    # requires. Same-session 5-rep A/B: 2.94 -> 2.18 s median,
-    # results asserted identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    from mysql2psql_spark.operators.materialize import materialize
-
-    @inheritable_thread_target
-    def _twin():
-        fr = materialize(events_ks_drift(spark, sf_dir))
-        fr.count()
-        return fr
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(_twin)
-        gate(e.filter(F.col("event_id") % 2 == 0), 0)
-        gate(e.filter(F.col("event_id") % 2 == 1), 1)
-        streamed = read_ks_summary(spark, out_dir)
-        batch = fut.result()
-    vals = ["n_a", "n_b", "n_values", "ks_num", "ks_at_value"]
-    s = streamed.select(
-        "event_type", *[F.col(v).alias(f"s_{v}") for v in vals]
-    )
-    b = batch.select(
-        "event_type", *[F.col(v).alias(f"b_{v}") for v in vals]
-    )
-    j = s.join(b, ["event_type"], "full_outer")
-    eq = None
-    for v in vals:
-        c = F.col(f"s_{v}").eqNullSafe(F.col(f"b_{v}"))
-        eq = c if eq is None else (eq & c)
-    return j.agg(
-        F.count(F.col("s_ks_num")).cast("bigint").alias("stream_rows"),
-        F.count(F.col("b_ks_num")).cast("bigint").alias("batch_rows"),
-        F.sum(F.when(F.col("b_ks_num").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("only_stream"),
-        F.sum(F.when(F.col("s_ks_num").isNull(), 1).otherwise(0))
-        .cast("bigint")
-        .alias("only_batch"),
-        F.sum(
-            F.when(
-                F.col("s_ks_num").isNotNull()
-                & F.col("b_ks_num").isNotNull()
-                & ~eq,
-                1,
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("value_mismatches"),
-    ).select(
-        F.lit(2).cast("bigint").alias("n_triggers"),
-        "stream_rows",
-        "batch_rows",
-        "only_stream",
-        "only_batch",
-        "value_mismatches",
+    return stream_batch_audit(
+        spark,
+        "stream_ks_summary",
+        audit_dir(spark, "stream_ks", sf_dir),
+        e,
+        "event_id",
+        make_gate=lambda out_dir, lineage: ks_counts_foreach_batch(
+            bounds, out_dir, lineage=lineage
+        ),
+        read=lambda out_dir: read_ks_summary(spark, out_dir),
+        twin=lambda: events_ks_drift(spark, sf_dir),
+        keys=["event_type"],
+        vals=["n_a", "n_b", "n_values", "ks_num", "ks_at_value"],
     )

@@ -2911,26 +2911,18 @@ def text_bpe_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# QUEUED (r17 registration per the window budget): the langid gate as
-# driver-visible evidence — extending the every-foreachBatch-gate-has-
-# an-oracled-audit-row invariant (stream_near_dup_gate /
-# stream_drift_summary / stream_ks_summary / stream_cdc_apply_summary)
-# to the new streaming language-ID gate (streaming/docs.py::
-# langid_counts_foreach_batch): profiles TRAINED on the corpus (frozen,
-# broadcast), the same corpus streamed through classification in two
-# doc_id-parity micro-batches, the compacted (lang_pred, n_docs)
-# summary audited against the one-shot batch classification as ONE
-# row. Classification is per-document pure given frozen profiles, so
-# streamed == batch bit-for-bit for ANY micro-batch partitioning — the
-# premise tests pin through a real two-trigger readStream plus replay
-# idempotence and foreign-lineage refusal on the shared guard.
+# The streaming language-ID gate's streamed-equals-batch audit row
+# (streaming/audit.py::stream_batch_audit): streaming/docs.py::
+# langid_counts_foreach_batch classifies the corpus in two doc_id-parity
+# micro-batches against profiles trained on it (frozen, broadcast), and
+# the compacted (lang_pred, n_docs) summary is compared to the one-shot
+# batch classification. Classification is per-document pure given
+# frozen profiles, so streamed == batch for any split.
 #
-# Scale shape: per-trigger cost is one batch-sized gram pipeline
-# against the broadcast profile table (langs x 40 rows, persisted at
-# gate construction — re-training per trigger would both waste the
-# corpus-sized profile build and violate the frozen contract the
-# associativity rests on); partials are n_langs rows; the audit join is
-# n_langs x n_langs. Streaming state zero.
+# Scale shape: per-trigger cost is one batch-sized gram pipeline against
+# the broadcast profile table (langs x 40 rows, seated once per session
+# by langid_profile_artifact); partials and the audit join are n_langs
+# rows. Streaming state zero.
 # ---------------------------------------------------------------------------
 _ORACLE_STREAM_LANGID = f"""
     WITH pred AS ({_ORACLE_LANGID}),
@@ -2951,127 +2943,54 @@ _ORACLE_STREAM_LANGID = f"""
 @query("stream_langid_summary", oracle=_ORACLE_STREAM_LANGID)
 def stream_langid_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streamed-equals-batch audit for the foreachBatch language-ID
-    gate — see the block above. Two doc_id-parity micro-batches;
-    partial writes are idempotent (mode=overwrite per batch dir) and
-    the lineage token is a per-invocation uuid, rotated with the
-    partial dir."""
-    import os
-    import shutil
-    import uuid
-
-    from mysql2psql_spark.operators.layout import session_scratch
+    gate — see the block above. The gate's tables and the twin are
+    released on return."""
     from mysql2psql_spark.operators.materialize import CacheHandle
     from mysql2psql_spark.operators.text import (
         char_ngram_table,
         langid_classify,
         langid_profile_artifact,
     )
+    from mysql2psql_spark.streaming.audit import audit_dir, stream_batch_audit
     from mysql2psql_spark.streaming.docs import (
         langid_counts_foreach_batch,
         read_langid_summary,
     )
 
-    # every consumer of d here is a gram-classification pipeline, so the
-    # whole query rides the fanned-out scan (r17)
+    # every consumer of d is a gram-classification pipeline, so the
+    # whole query rides the fanned-out scan
     d = load_table(spark, sf_dir, "documents", fanout=True)
-    # frozen profiles from the write-once session artifact (r17 A/B:
-    # 7.543 vs 8.449 s — the gate paid a per-invocation re-train +
-    # persist of what the contract itself calls an OFFLINE artifact;
-    # see operators/text.py::langid_profile_artifact). The batch
-    # queries keep their recompute layout (negative A/B, same record).
     profiles, langs = langid_profile_artifact(spark, sf_dir, k=_LANGID_K)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out_dir = os.path.join(session_scratch(spark), f"stream_langid_{sf_tag}")
-    shutil.rmtree(out_dir, ignore_errors=True)
+
+    def twin() -> DataFrame:
+        batch = (
+            langid_classify(
+                char_ngram_table(d).select("doc_id", "gram"),
+                profiles,
+                k=_LANGID_K,
+                langs=langs,
+            )
+            .groupBy("lang_pred")
+            .agg(F.count("*").cast("bigint").alias("n_docs"))
+        )
+        caches.append(batch)
+        return batch
+
     with CacheHandle() as caches:
-        gate = langid_counts_foreach_batch(
-            profiles,
-            langs,
-            out_dir,
-            lineage=f"stream_langid_summary:{uuid.uuid4()}",
-            k=_LANGID_K,
-            caches=caches,
+        return stream_batch_audit(
+            spark,
+            "stream_langid_summary",
+            audit_dir(spark, "stream_langid", sf_dir),
+            d,
+            "doc_id",
+            make_gate=lambda out_dir, lineage: langid_counts_foreach_batch(
+                profiles, langs, out_dir, lineage=lineage, k=_LANGID_K, caches=caches
+            ),
+            read=lambda out_dir: read_langid_summary(spark, out_dir),
+            twin=twin,
+            keys=["lang_pred"],
+            vals=["n_docs"],
         )
-        # The batch twin (a full corpus classification) never reads the
-        # gate's partials, so it computes on a background thread while
-        # the two triggers run (guide §2.6 — the stream_ks_summary A/B
-        # class); profiles/langs are the seated write-once artifact, so
-        # no first-touch race. Triggers stay strictly sequential.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        from mysql2psql_spark.operators.materialize import materialize
-
-        @inheritable_thread_target
-        def _twin():
-            fr = materialize(
-                langid_classify(
-                    char_ngram_table(d).select("doc_id", "gram"),
-                    profiles,
-                    k=_LANGID_K,
-                    langs=langs,
-                )
-                .groupBy("lang_pred")
-                .agg(F.count("*").cast("bigint").alias("n_docs"))
-            )
-            fr.count()
-            caches.append(fr)
-            return fr
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(_twin)
-            gate(d.filter(F.col("doc_id") % 2 == 0), 0)
-            gate(d.filter(F.col("doc_id") % 2 == 1), 1)
-            batch = fut.result()
-        streamed = read_langid_summary(spark, out_dir)
-        s = streamed.select("lang_pred", F.col("n_docs").alias("s_n_docs"))
-        b = batch.select("lang_pred", F.col("n_docs").alias("b_n_docs"))
-        j = s.join(b, ["lang_pred"], "full_outer")
-        out = j.agg(
-            F.count(F.col("s_n_docs")).cast("bigint").alias("stream_rows"),
-            F.count(F.col("b_n_docs")).cast("bigint").alias("batch_rows"),
-            # coalesce(sum, 0): an empty documents table yields zero
-            # joined rows, where SUM is NULL but the oracle's literal
-            # constants are 0 (r17, ADVICE)
-            F.coalesce(
-                F.sum(F.when(F.col("b_n_docs").isNull(), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("only_stream"),
-            F.coalesce(
-                F.sum(F.when(F.col("s_n_docs").isNull(), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("only_batch"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("s_n_docs").isNotNull()
-                        & F.col("b_n_docs").isNotNull()
-                        & ~F.col("s_n_docs").eqNullSafe(F.col("b_n_docs")),
-                        1,
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("value_mismatches"),
-        ).select(
-            F.lit(2).cast("bigint").alias("n_triggers"),
-            "stream_rows",
-            "batch_rows",
-            "only_stream",
-            "only_batch",
-            "value_mismatches",
-        )
-        # the audit row must materialize while the gate caches are live
-        rows = out.collect()
-    return spark.createDataFrame(
-        rows,
-        "n_triggers bigint, stream_rows bigint, batch_rows bigint,"
-        " only_stream bigint, only_batch bigint, value_mismatches bigint",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3389,26 +3308,19 @@ def text_quality_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# QUEUED (r18 registration per the window budget): the quality gate as
-# driver-visible evidence — extending the every-foreachBatch-gate-has-
-# an-oracled-audit-row invariant (near_dup/drift/KS/CDC/langid) to the
-# streaming quality gate (streaming/docs.py::
-# quality_counts_foreach_batch): the scorer's corpus side tables
-# (unigram tf + total, shingle df) TRAINED on the corpus (frozen,
-# vocabulary-sized, persisted at gate construction), the same corpus
-# streamed through scoring in two doc_id-parity micro-batches, the
-# compacted (bucket, n_docs, sum_score_micro) summary audited against
-# the one-shot batch scoring as ONE row. Scoring is per-document pure
-# given the frozen tables (quality_signals_frozen), so streamed ==
-# batch bit-for-bit for ANY micro-batch partitioning — pinned through
-# a real two-trigger readStream plus replay idempotence and
-# foreign-lineage refusal on the shared guard; the audit compares BOTH
-# the count and the score-mass partial (sum_score_micro), so a
-# single-document score drift anywhere flips the row.
+# The streaming quality gate's streamed-equals-batch audit row
+# (streaming/audit.py::stream_batch_audit): streaming/docs.py::
+# quality_counts_foreach_batch scores the corpus in two doc_id-parity
+# micro-batches against side tables trained on it (unigram tf + total,
+# shingle df; frozen), and the compacted (bucket, n_docs,
+# sum_score_micro) summary is compared to the one-shot batch scoring
+# over the same frozen tables. Scoring is per-document pure given the
+# frozen tables, so streamed == batch for any split; the score-mass
+# column makes a single document's score drift flip the row.
 #
 # Scale shape: per-trigger cost is one batch-sized signal pipeline
-# against the frozen vocab-sized tables; partials are 3 rows; the
-# audit join is buckets x buckets. Streaming state zero.
+# against the vocabulary-sized frozen tables; partials and the audit
+# join are 3 rows. Streaming state zero.
 # ---------------------------------------------------------------------------
 _ORACLE_STREAM_QUALITY = f"""
     WITH {_QSCORE_CTES},
@@ -3431,114 +3343,52 @@ _ORACLE_STREAM_QUALITY = f"""
 
 def stream_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streamed-equals-batch audit for the foreachBatch quality gate —
-    see the block above. Two doc_id-parity micro-batches; partial
-    writes are idempotent (mode=overwrite per batch dir) and the
-    lineage token is a per-invocation uuid, rotated with the partial
-    dir."""
-    import os
-    import shutil
-    import uuid
-
-    from mysql2psql_spark.operators.layout import session_scratch
+    see the block above. The gate's tables and the twin are released on
+    return."""
     from mysql2psql_spark.operators.materialize import CacheHandle
     from mysql2psql_spark.operators.text import (
         quality_signals_frozen,
         quality_stats_artifact,
     )
+    from mysql2psql_spark.streaming.audit import audit_dir, stream_batch_audit
     from mysql2psql_spark.streaming.docs import (
         quality_counts_foreach_batch,
         read_quality_summary,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    # frozen side tables from the write-once session artifact (r17 A/B,
-    # 7-rep interleaved at sf0.1: artifact 3.09 vs inline-train 4.52 s,
-    # control at 1.15x floor — the langid-gate adjudication repeated:
-    # per-invocation re-training of an OFFLINE artifact is the waste;
-    # see operators/text.py::quality_stats_artifact)
     tf, tot, dfreq = quality_stats_artifact(spark, sf_dir)
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    out_dir = os.path.join(session_scratch(spark), f"stream_quality_{sf_tag}")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    with CacheHandle() as caches:
-        gate = quality_counts_foreach_batch(
-            tf,
-            tot,
-            dfreq,
-            out_dir,
-            lineage=f"stream_quality_summary:{uuid.uuid4()}",
-            caches=caches,
-        )
-        gate(d.filter(F.col("doc_id") % 2 == 0), 0)
-        gate(d.filter(F.col("doc_id") % 2 == 1), 1)
-        # the batch twin consumes the SAME frozen (materialized) tables
-        # the gate trained — the audit pins the partials' associativity,
-        # not a second training run
-        f_tf, f_tot, f_dfreq = caches.frames[:3]
+
+    def twin() -> DataFrame:
+        # the same frozen tables the gate persisted (persist returns the
+        # frame itself): the audit pins the partials' associativity, not
+        # a second training run
         batch = (
-            quality_signals_frozen(d, f_tf, f_tot, f_dfreq)
+            quality_signals_frozen(d, tf, tot, dfreq)
             .groupBy("bucket")
             .agg(
                 F.count("*").cast("bigint").alias("n_docs"),
                 F.sum("score_micro").cast("bigint").alias("sum_score_micro"),
             )
         )
-        streamed = read_quality_summary(spark, out_dir)
-        s = streamed.select(
-            "bucket",
-            F.col("n_docs").alias("s_n_docs"),
-            F.col("sum_score_micro").alias("s_sum"),
+        caches.append(batch)
+        return batch
+
+    with CacheHandle() as caches:
+        return stream_batch_audit(
+            spark,
+            "stream_quality_summary",
+            audit_dir(spark, "stream_quality", sf_dir),
+            d,
+            "doc_id",
+            make_gate=lambda out_dir, lineage: quality_counts_foreach_batch(
+                tf, tot, dfreq, out_dir, lineage=lineage, caches=caches
+            ),
+            read=lambda out_dir: read_quality_summary(spark, out_dir),
+            twin=twin,
+            keys=["bucket"],
+            vals=["n_docs", "sum_score_micro"],
         )
-        b = batch.select(
-            "bucket",
-            F.col("n_docs").alias("b_n_docs"),
-            F.col("sum_score_micro").alias("b_sum"),
-        )
-        j = s.join(b, ["bucket"], "full_outer")
-        out = j.agg(
-            F.count(F.col("s_n_docs")).cast("bigint").alias("stream_rows"),
-            F.count(F.col("b_n_docs")).cast("bigint").alias("batch_rows"),
-            F.coalesce(
-                F.sum(F.when(F.col("b_n_docs").isNull(), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("only_stream"),
-            F.coalesce(
-                F.sum(F.when(F.col("s_n_docs").isNull(), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("only_batch"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("s_n_docs").isNotNull()
-                        & F.col("b_n_docs").isNotNull()
-                        & (
-                            ~F.col("s_n_docs").eqNullSafe(F.col("b_n_docs"))
-                            | ~F.col("s_sum").eqNullSafe(F.col("b_sum"))
-                        ),
-                        1,
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("value_mismatches"),
-        ).select(
-            F.lit(2).cast("bigint").alias("n_triggers"),
-            "stream_rows",
-            "batch_rows",
-            "only_stream",
-            "only_batch",
-            "value_mismatches",
-        )
-        # the audit row must materialize while the gate caches are live
-        rows = out.collect()
-    return spark.createDataFrame(
-        rows,
-        "n_triggers bigint, stream_rows bigint, batch_rows bigint,"
-        " only_stream bigint, only_batch bigint, value_mismatches bigint",
-    )
 
 
 # ---------------------------------------------------------------------------

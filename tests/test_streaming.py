@@ -1078,3 +1078,148 @@ def test_quality_gate_out_of_corpus_fallbacks(spark, tmp_path):
         gate(alien, 0)
         got = read_quality_summary(spark, out_dir).toPandas()
         assert got.n_docs.sum() == 2  # both alien docs classified
+
+
+# --- streamed-equals-batch audit (streaming/audit.py) ---------------------
+
+
+def _audit_queries() -> dict:
+    """name -> (query function, oracle SQL) for the six audit rows;
+    stream_quality_summary is not registered, so it is named here."""
+    from mysql2psql_spark.queries import ORACLE
+    from mysql2psql_spark.queries.text_q import (
+        _ORACLE_STREAM_QUALITY,
+        stream_quality_summary,
+    )
+
+    out = {
+        n: (QUERIES[n], ORACLE[n])
+        for n in (
+            "stream_near_dup_gate",
+            "stream_drift_summary",
+            "stream_cdc_apply_summary",
+            "stream_ks_summary",
+            "stream_langid_summary",
+        )
+    }
+    out["stream_quality_summary"] = (stream_quality_summary, _ORACLE_STREAM_QUALITY)
+    return out
+
+
+@pytest.fixture(scope="module")
+def empty_sf_dir(tmp_path_factory):
+    """Every SF_DIR table with its schema kept and no rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("sf_empty")
+    for f in sorted(os.listdir(SF_DIR)):
+        if f.endswith(".parquet"):
+            t = pq.read_table(os.path.join(SF_DIR, f))
+            pq.write_table(t.slice(0, 0), str(out / f))
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "name,tables",
+    [(n, "empty") for n in _audit_queries()]
+    + [
+        (n, "sf")
+        for n in ("stream_ks_summary", "stream_langid_summary", "stream_quality_summary")
+    ],
+)
+def test_stream_audit_matches_oracle(spark, empty_sf_dir, name, tables):
+    """DuckDB differential for the audit rows: all six on empty tables,
+    where every figure must read 0 (never NULL), and the three audits no
+    other test covers at SF_DIR."""
+    import duckdb
+    import pandas as pd
+
+    fn, oracle = _audit_queries()[name]
+    sf_dir = empty_sf_dir if tables == "empty" else SF_DIR
+    got = fn(spark, sf_dir).toPandas()
+    con = duckdb.connect()
+    try:
+        for t in ("documents", "events"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+            )
+        want = con.execute(oracle).df()
+    finally:
+        con.close()
+    cols = sorted(got.columns)
+    assert cols == sorted(want.columns)
+    pd.testing.assert_frame_equal(
+        got[cols].reset_index(drop=True),
+        want[cols].reset_index(drop=True),
+        check_dtype=False,
+        check_exact=True,
+    )
+    row = got.iloc[0]
+    assert row.only_stream == row.only_batch == row.value_mismatches == 0
+    if tables == "sf":
+        assert row.stream_rows == row.batch_rows > 0
+
+
+def test_stream_batch_audit_detects_loss_and_mismatch(spark, tmp_path):
+    """The helper's row must light up on a lost partial and on a changed
+    value, must raise what the twin raises, and must leave no thread
+    behind."""
+    import threading
+
+    from mysql2psql_spark.streaming.audit import stream_batch_audit
+
+    src = spark.createDataFrame(
+        [(i, i * 10) for i in range(6)], "k bigint, v bigint"
+    )
+
+    def gate(drop=None):
+        def make(out_dir, _lineage):
+            def apply(batch_df, batch_id):
+                if batch_id != drop:
+                    batch_df.write.mode("overwrite").parquet(
+                        f"{out_dir}/batch={batch_id}"
+                    )
+
+            return apply
+
+        return make
+
+    def audit(make_gate, twin):
+        return stream_batch_audit(
+            spark,
+            "audit_test",
+            str(tmp_path / "audit"),
+            src,
+            "k",
+            make_gate=make_gate,
+            read=lambda d: spark.read.schema("k bigint, v bigint").parquet(
+                f"{d}/batch=*"
+            ),
+            twin=twin,
+            keys=["k"],
+            vals=["v"],
+        ).collect()[0]
+
+    threads = threading.active_count()
+    ok = audit(gate(), lambda: src)
+    assert (ok.stream_rows, ok.batch_rows) == (6, 6)
+    assert ok.only_stream == ok.only_batch == ok.value_mismatches == 0
+    assert threading.active_count() == threads
+
+    lost = audit(gate(drop=1), lambda: src)  # odd k never written
+    assert (lost.only_batch, lost.only_stream, lost.stream_rows) == (3, 0, 3)
+
+    changed = audit(
+        gate(), lambda: src.withColumn("v", F.when(F.col("k") == 2, -1).otherwise(F.col("v")))
+    )
+    assert changed.value_mismatches == 1
+    assert changed.only_stream == changed.only_batch == 0
+
+    def broken():
+        raise RuntimeError("twin failed")
+
+    with pytest.raises(RuntimeError, match="twin failed"):
+        audit(gate(), broken)
+    assert threading.active_count() == threads
