@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mysql2psql_spark.operators.materialize import materialize
+from mysql2psql_spark.sizing import DRIVER_ROWS, rows_width
 
 
 def _t_frac(threshold: float) -> tuple[int, int]:
@@ -106,15 +107,15 @@ def _minhash_tables(
     consumer (within-corpus pairs, the incremental cross probe) MUST
     share them or band keys stop colliding across frames.
 
-    ``n_parts`` (r18, guide §2.5 — the _bpe_vocab_parts class): the
-    persisted ``arrs`` frame is DOC-COUNT-sized, but its aggregation
-    exchange runs at the session shuffle width and a persisted plan's
-    exchange is never AQE-coalesced (canChangeCachedPlanOutputPartitioning
-    is off), so every downstream consumer stage inherits session-width
-    partitions of near-empty tasks. Callers that know the corpus scale
-    pass a derived width; the frame re-clusters by ``id_col`` (hash, no
+    ``n_parts``: the persisted ``arrs`` frame is DOC-COUNT-sized, but its
+    aggregation exchange runs at the session shuffle width and a
+    persisted plan's exchange is never AQE-coalesced
+    (canChangeCachedPlanOutputPartitioning is off), so every downstream
+    consumer stage would inherit session-width partitions of near-empty
+    tasks. Callers pass the corpus byte width (``sizing.bytes_width`` at
+    256 KiB per slot); the frame re-clusters by ``id_col`` (hash, no
     round-robin sort) so doc-keyed consumers keep their clustering.
-    Default None preserves the session-width behavior."""
+    Default None keeps the session width."""
     r = k // bands
     agg = shingle_df.groupBy(id_col).agg(
         F.sort_array(F.collect_set(hash_col)).alias("arr"),
@@ -667,26 +668,20 @@ def connected_components(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     max_iter: int = 25,
-    driver_threshold: int = 1_000_000,
+    driver_threshold: int = DRIVER_ROWS,
 ) -> DataFrame:
     """(doc_id, cluster_id) for every node in `pairs`: cluster_id = the
     smallest doc id reachable through the near-dup graph — the canonical
     representative a dedup pipeline keeps.
 
-    Two execution paths, picked by the COUNTED edge-list size (the same
-    gate-on-measured-size discipline as the interval broadcast in
-    operators/rangejoin.py):
+    Two execution paths, picked by the COUNTED edge-list size against
+    the driver gate (``sizing.DRIVER_ROWS``, which states the rule):
 
-    - ``<= driver_threshold`` directed edges (default 1M — ~16 MB of raw
-      id pairs, a few hundred MB as Python Row objects, which is the
-      binding constraint): collect the edge list and run union-find on
-      the driver.
-      The near-dup graph is corpus-RARE (pairs, not documents), so this
-      is the common case; each distributed round otherwise costs more in
-      Catalyst plan analysis + job scheduling than the whole union-find
-      (measured at sf0.1: 512 edges, 1.8 s of round overhead vs <0.1 s
-      driver union-find). The collect is bounded by construction — the
-      count happens first.
+    - ``<= driver_threshold`` directed edges: collect the edge list and
+      run union-find on the driver. The near-dup graph is corpus-RARE
+      (pairs, not documents), so this is the common case; each
+      distributed round otherwise costs more in plan analysis and job
+      scheduling than the whole union-find.
     - above the gate: iterative min-label propagation — each round every
       node takes the min of its own label and its neighbors' labels
       (join + min-agg, one shuffle per round); converges in O(graph
@@ -732,18 +727,13 @@ def connected_components(
         .select("e.src", "e.dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Size the ITERATION to the graph, not the corpus: every round
-    # shuffles frames of |V|+|E| rows, and the near-dup graph is orders
-    # of magnitude smaller than the corpus that produced it, so running
-    # rounds at spark.sql.shuffle.partitions (a corpus-scale setting)
-    # pays per-round task overhead proportional to the corpus conf. One
-    # scalar count (which also materializes the persist we need anyway)
-    # picks ~1M edges/partition: a handful of tasks per round on a small
-    # pair graph, ~1000-way parallelism at 1e9 edges.
+    # One scalar count (which also materializes the persist) picks the
+    # path (the driver gate) and sizes the iteration to the graph, not
+    # the corpus (the row width); both rules are in sizing.py.
     n_edges = edges_raw.count()
     if n_edges <= driver_threshold:
         return _connected_components_driver(pairs, edges_raw, id_a)
-    n_part = int(max(4, min(1024, n_edges // 1_000_000 + 4)))
+    n_part = rows_width(n_edges)
     edges = edges_raw.repartition(n_part, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     edges.count()
     edges_raw.unpersist(False)
@@ -900,7 +890,7 @@ def connected_components_incremental(
     id_a: str = "doc_a",
     id_b: str = "doc_b",
     caches: "list[DataFrame] | None" = None,
-    driver_threshold: int = 1_000_000,
+    driver_threshold: int = DRIVER_ROWS,
 ) -> DataFrame:
     """Maintain a standing near-dup clustering under a batch of NEW
     pairs WITHOUT re-clustering the corpus — the maintenance step after
@@ -931,8 +921,9 @@ def connected_components_incremental(
     re-clustered; everything else is batch-edge-sized. Per-batch work is
     O(new edges), not O(corpus).
 
-    Two execution paths, picked by the COUNTED batch size (r17
-    optimization — the :func:`connected_components` gate discipline):
+    Two execution paths, picked by the COUNTED batch size against the
+    driver gate (``sizing.DRIVER_ROWS``, which states the rule and its
+    crossover table):
 
     - ``<= driver_threshold`` new pairs: the whole batch-bounded tail
       (endpoint labels, contraction, union-find, remap, fresh rows)
@@ -944,26 +935,12 @@ def connected_components_incremental(
       3 persists and 2 actions with 2 bounded collects and 1 broadcast.
       The corpus map still never moves: it is read by the same two
       map-side operations (endpoint semi-join, relabel left join).
-      Measured at sf0.1 (phase probe, idle host): the tail's wall is
-      scheduling, not data — see OPTIMIZATION_r17.md.
     - above the gate: the original all-DataFrame tail (no bounded
-      collect anywhere beyond the contraction CC's own gate).
-
-    Gate constant (r18, VERDICT r17 #5 — measured, not assumed):
-    `scripts/gate_crossover_probe.py` timed both tails on synthetic
-    merge batches at 10^3/10^4/10^5/10^6 pairs (3 reps, outputs
-    identity-checked). The driver tail won at EVERY size — 1.4 vs
-    3.2 s (1e3), 1.45 vs 3.0 (1e4), 3.5 vs 4.8 (1e5), 23-26 vs 39-40 s
-    (1e6) — so the measured crossover sits ABOVE 1e6 and the binding
-    constraint remains driver memory for the bounded collect (the
-    documented ~16 MB of raw pairs / few hundred MB as Rows at the
-    gate). At 1e6 the probe's adversarial input (a diameter-1M merge
-    CHAIN) also exposed that the distributed tail's contraction solve
-    (connected_components, max_iter=25) silently truncates on
-    high-diameter graphs where the driver union-find stays exact —
-    near-dup contraction graphs are small-diameter by construction
-    (the operator's documented domain), one more reason the gate stays
-    at 1e6 rather than lower.
+      collect anywhere beyond the contraction CC's own gate). Its
+      contraction solve (connected_components, ``max_iter=25``) can
+      stop early on a high-diameter graph, such as a long merge chain,
+      where the driver union-find stays exact; near-dup contraction
+      graphs are small-diameter by construction.
     """
     from mysql2psql_spark.operators.materialize import materialize
 

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mysql2psql_spark.sizing import rows_width
+
 # 1e-9 contribution grain: fine enough that 3-iteration ranks are
 # stable, exact as BIGINT up to rank sums of ~9e9 (2^63 / 1e9).
 _SCALE = 1_000_000_000
@@ -137,15 +139,11 @@ def pagerank(
     # edge frame once inside the single job, and keeps lineage (so a
     # lost executor recomputes instead of failing — strictly better
     # under dynamic allocation, see operators/materialize.py).
-    # ``n_parts`` (r18, guide §2.5 — the label_propagation/k_core width
-    # discipline, VERDICT r17 #3): the persisted edge frame's exchange
-    # is never AQE-coalesced (cached plans keep their static width), so
-    # with the session default every iteration's join/degree stage
-    # schedules session-width partitions over a GRAPH-sized frame.
-    # Callers that know the edge count pass a graph-derived width
-    # (~1M edges/partition, capped at 1024 like the siblings); None
-    # preserves the session-width behavior. Ranks are exact integer
-    # sums — partitioning never changes a value.
+    # ``n_parts``: the persisted edge frame's exchange is never
+    # AQE-coalesced (cached plans keep their static width), so callers
+    # that know the edge count pass its row width (sizing.rows_width);
+    # None keeps the session width. Ranks are exact integer sums, so
+    # partitioning never changes a value.
     w = Window.partitionBy("src")
     if n_parts is not None:
         edges = edges.repartition(n_parts, "src")
@@ -356,6 +354,23 @@ def triangles_adjacency(edges: DataFrame, orient: str = "id") -> DataFrame:
     return contrib.groupBy("node").agg(F.sum("n").cast("bigint").alias("n_triangles"))
 
 
+def _edges_by_v(
+    edges: DataFrame, caches: "list[DataFrame] | CacheHandle | None"
+) -> DataFrame:
+    """The (v, u) edge frame persisted at its row width
+    (``sizing.rows_width``), hash-partitioned by ``v`` and seated; the
+    staging copy that was counted for the width is freed."""
+    from mysql2psql_spark.operators.materialize import materialize, unmaterialize
+
+    raw = materialize(edges.select(F.col("src").alias("v"), F.col("dst").alias("u")))
+    out = materialize(raw.repartition(rows_width(raw.count()), "v"))
+    out.count()
+    unmaterialize(raw)
+    if caches is not None:
+        caches.append(out)
+    return out
+
+
 def label_propagation(
     edges: DataFrame,
     rounds: int = 2,
@@ -376,12 +391,10 @@ def label_propagation(
     SQL oracle where convergence-loop operators get rows-only checks.
 
     Scale shape: the edge list is persisted ONCE, partitioned by the
-    destination vertex ``v`` into GRAPH-SIZED partitions (~1M edges
-    each, the connected_components discipline at operators/dedup.py:621
-    — a pair graph is orders of magnitude smaller than its corpus, so
-    rounds run at spark.sql.shuffle.partitions pay task-scheduling
-    overhead proportional to a corpus-scale conf; under the driver's
-    vanilla 200-partition session that tripled the round cost). Every
+    destination vertex ``v`` into graph-sized partitions
+    (``sizing.rows_width``: a pair graph is orders of magnitude smaller
+    than its corpus, so rounds at spark.sql.shuffle.partitions would pay
+    task-scheduling overhead proportional to a corpus-scale conf). Every
     downstream clustering (the seed ``distinct``, each round's
     ``(v, lbl)`` count and the per-vertex mode pick) is on a superset of
     ``v``, so with the neighbor-label join broadcast (AQE picks it
@@ -391,30 +404,14 @@ def label_propagation(
     pick is a ``min_by(lbl, struct(-n, lbl))`` aggregation — largest
     count, then smallest label, for any orderable label type — not a
     window, so nothing sorts, and two hash aggs pipeline per round.
-    Measured at sf0.1 (2.25M-undirected-edge part co-order graph,
-    same-session interleaved A/B medians): 32-part rounds 4.33 s ->
-    graph-sized (6-part) rounds 3.74 s, with the sample spread tightening
-    from 2.97-5.52 to 3.58-4.26 s — per-round scheduling is the variance
-    source, not the joins. Labels frames chain lineage only ``rounds`` deep — no
-    checkpoint needed for small fixed round counts; the persisted edge
-    frame follows the pagerank cache-release contract (ADVICE r10): the
-    returned labels frame still reads it lazily, so it cannot be
-    unpersisted here — long-lived library callers pass a
-    ``materialize.CacheHandle`` (or plain list) via ``caches`` and
-    release once labels are consumed; with ``caches=None`` the frame
-    stays cached until ``spark.catalog.clearCache()`` (the bench/driver
-    per-query pattern) or session end.
+    Labels frames chain lineage only ``rounds`` deep, so no checkpoint
+    is needed. The returned labels frame still reads the persisted edge
+    frame lazily, so it is released by the caller: pass a
+    ``materialize.CacheHandle`` (or list) as ``caches``; with
+    ``caches=None`` it stays cached until ``spark.catalog.clearCache()``
+    or session end.
     """
-    from mysql2psql_spark.operators.materialize import materialize, unmaterialize
-
-    raw = materialize(edges.select(F.col("src").alias("v"), F.col("dst").alias("u")))
-    n_edges = raw.count()  # also materializes the persist we need anyway
-    n_part = int(max(4, min(1024, n_edges // 1_000_000 + 4)))
-    und = materialize(raw.repartition(n_part, "v"))
-    und.count()  # seat the round-partitioned copy, then free the staging one
-    unmaterialize(raw)
-    if caches is not None:
-        caches.append(und)
+    und = _edges_by_v(edges, caches)
     labels = und.select("v").distinct().withColumn("lbl", F.col("v"))
     for _ in range(rounds):
         nbr = und.join(
@@ -507,22 +504,12 @@ def k_core_profile(
     columns; nothing sorts, no window, no |V|-scale broadcast (the
     survivor frame joins shuffled — at graph scale it outgrows any
     broadcast threshold). The input edge frame is persisted once in
-    GRAPH-SIZED partitions by ``v`` (the label_propagation discipline:
-    round cost on a small graph is task scheduling, not compute, under a
-    corpus-scale shuffle conf), and every per-round frame is persisted
-    because it has >= 2 consumers (next round + its own count). The
+    graph-sized partitions by ``v`` (``sizing.rows_width``: round cost
+    on a small graph is task scheduling, not compute), and every
+    per-round frame is persisted because it has >= 2 consumers (next round + its own count). The
     per-round stats ride ONE action: rounds' 1-row aggregates cross-join
     and union into a single returned frame."""
-    from mysql2psql_spark.operators.materialize import materialize, unmaterialize
-
-    raw = materialize(edges.select(F.col("src").alias("v"), F.col("dst").alias("u")))
-    n_edges = raw.count()
-    n_part = int(max(4, min(1024, n_edges // 1_000_000 + 4)))
-    cur = materialize(raw.repartition(n_part, "v"))
-    cur.count()
-    unmaterialize(raw)
-    if caches is not None:
-        caches.append(cur)
+    cur = _edges_by_v(edges, caches)
     stats = []
     for r in range(1, rounds + 1):
         surv, cur = _peel_round(cur, k, caches, truncate=(r % 3 == 0))
@@ -552,16 +539,7 @@ def k_core(
     :func:`k_core_profile`'s fixed-round semantics earn the exact
     unrolled-CTE oracle (the connected_components / label_propagation
     split, operators/dedup.py)."""
-    from mysql2psql_spark.operators.materialize import materialize, unmaterialize
-
-    raw = materialize(edges.select(F.col("src").alias("v"), F.col("dst").alias("u")))
-    n_edges = raw.count()
-    n_part = int(max(4, min(1024, n_edges // 1_000_000 + 4)))
-    cur = materialize(raw.repartition(n_part, "v"))
-    cur.count()
-    unmaterialize(raw)
-    if caches is not None:
-        caches.append(cur)
+    cur = _edges_by_v(edges, caches)
     prev_n = None
     surv = cur.select("v").distinct()
     # Intra-loop release (ADVICE r11): round r's count() is the LAST

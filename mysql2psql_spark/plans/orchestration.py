@@ -1,12 +1,13 @@
 """Orchestration: multi-table / multi-database runs (SURVEY §2.14).
 
 The reference fans out one OS process per database, capped at cpu_count
-(/root/reference/main.py:170-190), and logs per-phase wall times
-(main.py:73-110). On Spark the cluster scheduler owns parallelism: tables
-run as concurrent JOBS from a driver-side thread pool into FAIR scheduler
-pools, and every stage's parallelism comes from partitioning. The phase
-timer reproduces the reference's logging discipline so bench runs emit
-comparable stage breakdowns (BASELINE.md)."""
+(its ``main.py:170-190``), and logs per-phase wall times
+(``main.py:73-110``). On Spark the scheduler owns parallelism: independent
+actions run as concurrent JOBS submitted from a driver-side thread pool
+(``run_concurrent``, the engine's only one), and every stage's
+parallelism comes from partitioning. The phase timer reproduces the
+reference's logging discipline so bench runs emit comparable stage
+breakdowns (BASELINE.md)."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -42,23 +44,20 @@ def run_concurrent(
     spark: SparkSession,
     jobs: Iterable[tuple[str, Callable[[], Any]]],
     max_parallel: int = 4,
-    pool: str = "migration",
 ) -> dict[str, Any]:
-    """Run independent per-table actions as concurrent Spark jobs.
+    """Run independent actions as concurrent Spark jobs; return
+    ``{name: result}`` in job order, whatever order they finish in.
 
-    Driver threads only dispatch; executors do the work. FAIR pools keep
-    one giant table from starving the small ones (the Spark analogue of
-    the reference's per-db process pool, minus the per-process JVM cost).
+    Driver threads only dispatch; executors do the work. The scheduler
+    is FIFO, so a later job's tasks take the slots an earlier job leaves
+    idle. Each job is wrapped in
+    its own ``inheritable_thread_target``, so it starts from a private
+    copy of the caller's local properties (job group, description):
+    what one job sets is never seen by another. A failure propagates
+    once every job has finished.
     """
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-    results: dict[str, Any] = {}
-
-    def run(name: str, fn: Callable[[], Any]) -> None:
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", pool)
-        results[name] = fn()
-
     with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-        futures = {ex.submit(run, n, f): n for n, f in jobs}
-        for fut in futures:
-            fut.result()  # propagate failures with their table name context
-    return results
+        futures = {
+            name: ex.submit(inheritable_thread_target(spark)(fn)) for name, fn in jobs
+        }
+    return {name: fut.result() for name, fut in futures.items()}

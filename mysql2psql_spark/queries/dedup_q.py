@@ -24,35 +24,14 @@ from pyspark.sql import functions as F
 from mysql2psql_spark.operators.dedup import minhash_lsh_pairs, simhash_pairs
 from mysql2psql_spark.operators.multimodal import extract_features, with_binary_payload
 from mysql2psql_spark.operators.text import shingle_hash_table
+from mysql2psql_spark.plans.orchestration import run_concurrent
 from mysql2psql_spark.queries import query
+from mysql2psql_spark.sizing import DRIVER_ROWS, bytes_width
 from mysql2psql_spark.sources import load_table
 from mysql2psql_spark.queries.text_q import _SHINGLE_SQL
 
 _JACCARD = """CAST(LEN(LIST_INTERSECT(a.sg, b.sg)) AS DOUBLE)
                  / (LEN(a.sg) + LEN(b.sg) - LEN(LIST_INTERSECT(a.sg, b.sg)))"""
-
-
-def _doc_table_parts(spark: SparkSession, sf_dir: str) -> int:
-    """Partition width for DOC-COUNT-sized persisted frames (the minhash
-    per-doc array tables), derived from the documents table's on-disk
-    bytes — guide §2.5 / the _bpe_vocab_parts class: these frames hold
-    one row per document, but their aggregation exchanges run at the
-    session shuffle width and a persisted plan's exchange is never
-    AQE-coalesced, so every consumer stage schedules session-width
-    partitions of near-empty tasks. 256 KB of corpus per slot keeps the
-    fixture's frames a handful of partitions while any real corpus
-    saturates the cluster; width caps at defaultParallelism either way
-    (scale-adaptive, never a local constant)."""
-    import os
-
-    from mysql2psql_spark.sources.parquet import _path_stat
-
-    width = spark.sparkContext.defaultParallelism
-    try:
-        _, nbytes = _path_stat(os.path.realpath(f"{sf_dir}/documents.parquet"))
-    except OSError:
-        return width
-    return int(max(2, min(width, (nbytes + (256 << 10) - 1) // (256 << 10))))
 
 
 @query(
@@ -968,7 +947,7 @@ def dedup_minhash_incremental(
         corpus,
         threshold=0.5,
         caches=caches,
-        n_parts=_doc_table_parts(spark, sf_dir),
+        n_parts=bytes_width(spark, f"{sf_dir}/documents.parquet", 256 << 10, 2),
     )
 
 
@@ -1084,25 +1063,14 @@ def dedup_leakage_safe_split(
         caches.append(cc)
     d = load_table(spark, sf_dir, "documents").select("doc_id")
 
-    # r17 optimization: the leak audit is PAIR-GRAPH-BOUNDED — the
-    # distributed tail below already routes the cluster map and both
-    # pair-member label frames through the driver via F.broadcast, so
-    # computing the leaky-pair counts in the driver is the same memory
-    # class while removing a distinct shuffle, four broadcast-exchange
-    # builds and their joins from the final action. Only the corpus
-    # stats (doc/split counts) genuinely need a distributed pass: ONE
-    # documents scan joined against the broadcast map. Gated on the
-    # counted pair-list size (the connected_components discipline —
-    # cc has at most 2x pairs rows, and the count reads the persist the
-    # CC gate already built); above the gate the original all-DataFrame
-    # tail runs unchanged.
-    # gate constant justified by scripts/gate_crossover_probe.py (r18):
-    # the driver tail wins at every probed size up to 1e6 pairs (23-26
-    # vs 39-40 s there), so the crossover is above the gate and driver
-    # memory is the binding constraint — see
-    # connected_components_incremental's docstring for the full table.
+    # The leak audit is pair-graph-bounded, so at or below the driver
+    # gate (sizing.py; cc has at most 2x pairs rows, and the count reads
+    # the persist the CC gate already built) the leaky-pair counts run
+    # in the driver and only the corpus stats (doc/split counts) need a
+    # distributed pass: one documents scan joined against the broadcast
+    # cluster map. Above the gate the all-DataFrame tail runs.
     n_pairs = pairs.count()
-    if n_pairs <= 1_000_000:
+    if n_pairs <= DRIVER_ROWS:
         import hashlib
 
         prs = pairs.collect()
@@ -1287,7 +1255,7 @@ def stream_near_dup_gate(
     d = load_table(spark, sf_dir, "documents")
     new = d.filter(F.col("doc_id") % 10 >= 8)
     corpus_sh = shingle_hash_table(d.filter(F.col("doc_id") % 10 < 8))
-    parts = _doc_table_parts(spark, sf_dir)
+    parts = bytes_width(spark, f"{sf_dir}/documents.parquet", 256 << 10, 2)
     corpus_tables = _minhash_tables(corpus_sh, n_parts=parts)
     # seat the shared corpus banding build before either side probes it
     corpus_tables[0].count()
@@ -1476,50 +1444,35 @@ def dedup_method_agreement(
     sh.count()
     if caches is not None:
         caches.append(sh)
-    # The three method pipelines are INDEPENDENT consumers of the seated
-    # shingle frame; materialize them eagerly from a 3-thread pool
-    # (guide §2.6) so each pipeline's stage tail back-fills the others'
-    # idle slots instead of the union plan serializing the three chains
-    # (same-session 5-rep interleaved A/B: 3.61 -> 2.68 s median,
-    # results asserted identical).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    # r17 optimization: the audit tail (three pairwise set
-    # intersections + six counts) is PAIR-SET-BOUNDED, and each method's
-    # count is needed in the output anyway — so each thread collects its
-    # pair set right after the seat count (a cache read) when the
-    # counted size clears the driver gate, and the set algebra runs in
-    # the driver: the final action's 6 joins/aggs + 2 crossJoins
-    # (measured ~1.1 s at sf0.1, ~20% of the query wall) collapse to a
-    # 3-row LocalTableScan. The jaccard division stays a Spark
-    # expression over the local frame so rounding semantics are
-    # bit-identical to the distributed tail, which remains the above-
-    # gate path.
-    _GATE = 1_000_000
-
-    @inheritable_thread_target
-    def _build(item):
-        name, fn = item
+    # The three method pipelines are independent consumers of the seated
+    # shingle frame, so they run as three concurrent jobs and each
+    # pipeline's stage tail fills the others' idle slots. Each job
+    # persists and counts its pair frame; at or below the driver gate
+    # (sizing.py) it also collects the pair set, and the set algebra
+    # runs in the driver. The jaccard division stays a Spark expression
+    # over the local rows, so rounding is the same as in the distributed
+    # tail, which is the above-gate path. ``frames`` is in job order, the
+    # order the (method_a, method_b) rows are built in.
+    def _build(fn):
         fr = materialize(fn(spark, sf_dir, shingles=sh).select("doc_a", "doc_b"))
         n = fr.count()
         rows = (
-            frozenset((r[0], r[1]) for r in fr.collect()) if n <= _GATE else None
+            frozenset((r[0], r[1]) for r in fr.collect()) if n <= DRIVER_ROWS else None
         )
-        return name, (fr, n, rows)
+        return fr, n, rows
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        frames = dict(
-            pool.map(
-                _build,
-                (
-                    ("minhash_lsh", dedup_minhash_lsh),
-                    ("ngram_jaccard", dedup_ngram_jaccard),
-                    ("simhash", dedup_simhash),
-                ),
+    frames = run_concurrent(
+        spark,
+        [
+            (name, lambda fn=fn: _build(fn))
+            for name, fn in (
+                ("minhash_lsh", dedup_minhash_lsh),
+                ("ngram_jaccard", dedup_ngram_jaccard),
+                ("simhash", dedup_simhash),
             )
-        )
+        ],
+        max_parallel=3,
+    )
     if caches is not None:
         caches.extend(fr for fr, _, _ in frames.values())
     if all(rows is not None for _, _, rows in frames.values()):

@@ -21,6 +21,7 @@ from mysql2psql_spark.operators.graph import (
     undirected_edges,
 )
 from mysql2psql_spark.queries import query
+from mysql2psql_spark.sizing import rows_width
 from mysql2psql_spark.sources import load_table
 
 # Nodes are BIGINT-encoded (supplier k -> 2k, customer k -> 2k+1): integer
@@ -123,17 +124,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (sc_pairs — the distinct ran once at write time), so the doubling
     # needs no dedup (s/c namespaces disjoint: forward and reversed
     # copies cannot collide) and pagerank takes the dedup_edges=False
-    # path. Same-session interleaved A/B at sf0.1: 2.90 -> 2.19 s
-    # median vs the r10 rebuild-per-query shape; ranks bit-identical
-    # (the dedup is exact either way).
+    # path.
     pairs = sc_pairs(spark, sf_dir)
-    # graph-derived iteration width (r18, guide §2.5 / VERDICT r17 #3):
-    # the count is a parquet count-star over the session's bucketed
-    # pair files (metadata-cheap); x2 for the direction doubling. With
-    # the session-width default every one of the 3 iterations scheduled
-    # 32-partition stages over a |V|-row rank frame.
+    # The iterations run at the graph's row width (sizing.py), not the
+    # session width. The count is a parquet count-star over the bucketed
+    # pair files (metadata-cheap), doubled for the two directions.
     n_edges = 2 * pairs.count()
-    n_part = int(max(4, min(1024, n_edges // 1_000_000 + 4)))
+    n_part = rows_width(n_edges)
     edges = undirected_edges(pairs, "s", "c", pairs_distinct=True)
     ranks = pagerank(
         edges, iters=3, damping=0.85, dedup_edges=False, n_parts=n_part

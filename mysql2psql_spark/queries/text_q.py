@@ -19,6 +19,8 @@ from mysql2psql_spark.operators.text import (
     quality_score,
     token_count,
 )
+from mysql2psql_spark.plans.orchestration import run_concurrent
+from mysql2psql_spark.sizing import bytes_width
 from mysql2psql_spark.sources import load_table
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -2640,28 +2642,6 @@ _BPE_PAIRS_EXPR = (
 )
 
 
-def _bpe_vocab_parts(spark: SparkSession, sf_dir: str) -> int:
-    """Partition count for the learner's vocabulary-sized frames,
-    derived from the corpus bytes (playbook rule 3 applied to BPE: the
-    per-step work is DISTINCT-WORD-sized, sublinear in the corpus, so
-    corpus-width partitioning makes every one of the K steps a
-    scheduling exercise — at sf0.1 the toks frame is 31 rows spread
-    over 32 partitions x 6 steps x several stages). 4 MB of corpus per
-    slot keeps a small corpus's steps near-single-task while any real
-    corpus still saturates the cluster; width caps at
-    defaultParallelism either way."""
-    import os
-
-    from mysql2psql_spark.sources.parquet import _path_stat
-
-    width = spark.sparkContext.defaultParallelism
-    try:
-        _, nbytes = _path_stat(os.path.realpath(f"{sf_dir}/documents.parquet"))
-    except OSError:
-        return width
-    return max(1, min(width, (nbytes + (4 << 20) - 1) // (4 << 20)))
-
-
 def _bpe_learn_merges(
     spark: SparkSession,
     wc: DataFrame,
@@ -2670,7 +2650,10 @@ def _bpe_learn_merges(
 ) -> list[tuple[int, str, str, int]]:
     """The K-step learning loop over a (word, freq) frame — see the
     block above. One bounded 1-row collect per step. ``parts`` sizes
-    the vocab frame's partitioning (see _bpe_vocab_parts)."""
+    the vocab frame's partitioning: callers pass the corpus byte width
+    at 4 MiB per slot, because the per-step work is distinct-word-sized,
+    sublinear in the corpus, and corpus-width partitions would make each
+    of the K steps a scheduling exercise."""
     from pyspark.storagelevel import StorageLevel
 
     from mysql2psql_spark.operators.text import bpe_apply_rule
@@ -2729,7 +2712,9 @@ def text_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     fewer than K rows when the corpus exhausts its pairs first."""
     d = load_table(spark, sf_dir, "documents")
     merges = _bpe_learn_merges(
-        spark, _word_counts(d), parts=_bpe_vocab_parts(spark, sf_dir)
+        spark,
+        _word_counts(d),
+        parts=bytes_width(spark, f"{sf_dir}/documents.parquet", 4 << 20, 1),
     )
     return spark.createDataFrame(
         merges,
@@ -2866,17 +2851,12 @@ def text_bpe_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-table diff between the doc_id-parity corpus halves — see
     the block above."""
     d = load_table(spark, sf_dir, "documents")
-    parts = _bpe_vocab_parts(spark, sf_dir)
-    # The two half-corpus learners are INDEPENDENT job chains whose
-    # per-step cost is driver-latency-bound (K bounded argmax collects
-    # each); overlap them from a 2-thread pool (guide §2.6) so one
-    # learner's step jobs back-fill the other's idle gaps. Results are
-    # deterministic either way — each learner's lineage is its own.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    @inheritable_thread_target
+    parts = bytes_width(spark, f"{sf_dir}/documents.parquet", 4 << 20, 1)
+    # The two half-corpus learners are independent job chains whose
+    # per-step cost is driver latency (K bounded argmax collects each),
+    # so they run as two concurrent jobs and one learner's step jobs
+    # fill the other's idle gaps. Each learner's lineage is its own, so
+    # the result does not depend on the overlap.
     def _learn(parity: int) -> list:
         return _bpe_learn_merges(
             spark,
@@ -2884,9 +2864,9 @@ def text_bpe_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             parts=parts,
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fa, fb = pool.submit(_learn, 0), pool.submit(_learn, 1)
-        ma, mb = fa.result(), fb.result()
+    ma, mb = run_concurrent(
+        spark, [("a", lambda: _learn(0)), ("b", lambda: _learn(1))], max_parallel=2
+    ).values()
     a = {(pa, pb): (k, c) for k, pa, pb, c in ma}
     b = {(pa, pb): (k, c) for k, pa, pb, c in mb}
     rows = []

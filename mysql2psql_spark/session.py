@@ -6,7 +6,7 @@ Defaults are tuned so the same code runs on local[N] for tests and on a
 multi-executor cluster unchanged:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
-- shuffle partitions sized from the env, not the 200 default
+- shuffle partitions sized to the session width, not the 200 default
 - Arrow enabled for every pandas interchange (vectorized UDF path)
 - session timezone pinned to UTC so timestamp semantics are stable across
   engines (the DuckDB oracle is UTC-naive)
@@ -18,8 +18,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def get_spark(
     app_name: str = "mysql2psql_spark",
@@ -30,15 +28,14 @@ def get_spark(
     """Build (or reuse) a SparkSession with the engine's defaults.
 
     On a real cluster, ``master`` comes from spark-submit and is not set
-    here; locally we default to ``local[$SPARK_GRAFT_CPUS]``.
+    here; locally we default to ``local[$SPARK_GRAFT_CPUS]``. The same
+    width sets the shuffle partitions; it defaults to the cores this
+    process may run on.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS,
-        )
+        .config("spark.sql.shuffle.partitions", shuffle_partitions or cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -48,7 +48,7 @@ _SCHEMA_CACHE: _OrderedDict[tuple[str, str, float], object] = _OrderedDict()
 _SCHEMA_CACHE_MAX = 256
 
 
-def _path_stat(path: str) -> tuple[float, int]:
+def path_stat(path: str) -> tuple[float, int]:
     """(newest mtime, total data bytes) among ``path`` and (for a
     directory) its entries, recursing one level into subdirectories —
     the footer files whose in-place rewrite must invalidate.
@@ -86,7 +86,7 @@ def _path_stat(path: str) -> tuple[float, int]:
 
 
 def _path_mtime(path: str) -> float:
-    return _path_stat(path)[0]
+    return path_stat(path)[0]
 
 
 # Scale-adaptive scan fan-out (optimization guide §2.5 "input skew: one
@@ -109,26 +109,18 @@ def _path_mtime(path: str) -> float:
 # Both bounds are byte thresholds on the INPUT, not tuned core counts:
 # width always tracks sparkContext.defaultParallelism.
 #
-# OPT-IN per call site, not blanket (r17 A/B, 15-query 5-rep
-# interleaved, count protocol): the explode/codec-heavy pipelines win
-# big (langid 4.68 -> 2.32 s, vad spans 3.30 -> 1.98, minhash 2.10 ->
-# 1.42, m8 2.25 -> 1.69) but scan->join/agg shapes whose map side is
-# already cheap PAY the exchange for nothing (q01 0.26 -> 0.60, q03
-# 0.46 -> 1.03, q09 0.51 -> 1.45, s4 0.12 -> 0.23, w3 0.10 -> 0.21):
-# the fan-out only pays where per-row downstream work dwarfs the
-# shuffle of the raw bytes, which is a property of the CONSUMER, so
-# the consumer declares it.
+# Fan-out is opt-in per call site (``load_table(fanout=True)``), not
+# blanket: it pays only where per-row downstream work (exploded
+# n-grams/shingles, byte codecs) dwarfs the shuffle of the raw bytes,
+# while a scan -> join/agg shape whose map side is already cheap pays
+# the exchange for nothing. That is a property of the consumer, so the
+# consumer declares it (OPTIMIZATION_r17.md has the A/B).
 _FANOUT_MIN_BYTES = 256 * 1024
 _FANOUT_MAX_BYTES = 64 * 1024 * 1024
-_SCAN_FANOUT = True  # kill switch so probes can A/B the layout
 
 
 def _scan_fanout(spark: SparkSession, df: DataFrame, nbytes: int | None) -> DataFrame:
-    if (
-        not _SCAN_FANOUT
-        or nbytes is None
-        or not (_FANOUT_MIN_BYTES <= nbytes <= _FANOUT_MAX_BYTES)
-    ):
+    if nbytes is None or not (_FANOUT_MIN_BYTES <= nbytes <= _FANOUT_MAX_BYTES):
         return df
     width = spark.sparkContext.defaultParallelism
     if width <= 2:
@@ -161,7 +153,7 @@ def load_table(
     key = None
     nbytes = None
     try:
-        mtime, nbytes = _path_stat(path)
+        mtime, nbytes = path_stat(path)
         key = (spark.sparkContext.applicationId, path, mtime)
     except OSError:
         pass  # non-local / non-statable path: no caching

@@ -21,15 +21,14 @@ import os
 import shutil
 import uuid
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql2psql_spark.operators.layout import session_scratch
 from mysql2psql_spark.operators.materialize import materialize
+from mysql2psql_spark.plans.orchestration import run_concurrent
 
 
 def audit_dir(spark: SparkSession, prefix: str, sf_dir: str) -> str:
@@ -74,13 +73,14 @@ def stream_batch_audit(
     of a stream, batch 1 follows batch 0, and the audit checks the union
     of what the triggers wrote in that order. The twin never reads the
     partials, so it is built right after the gate (it may use what the
-    gate seated) and computed, persisted and counted, on one background
-    thread while the triggers run. On the perfbench corpus workload at
+    gate seated) and computed, persisted and counted while the triggers
+    run: the twin and the triggers (then the read-back) are two
+    ``run_concurrent`` jobs. On the perfbench corpus workload at
     ``local[4]`` (4-core host), serial KS and langid twins cost langid
     alone 0.7-1.0 s, and the overlapped near-dup twin lowers
-    ``op_tail_s`` (the near-dup op) against a serial one. The thread
-    lives in a ``with`` block, so none outlives the call, and an error
-    raised by the twin propagates from here. The persisted twin is the
+    ``op_tail_s`` (the near-dup op) against a serial one. No thread
+    outlives the call, and an error raised by either job propagates
+    from here. The persisted twin is the
     caller's to release: register it on a ``CacheHandle`` inside
     ``twin`` if it must not outlive the call.
 
@@ -92,18 +92,20 @@ def stream_batch_audit(
     shutil.rmtree(out_dir, ignore_errors=True)
     apply = make_gate(out_dir, f"{name}:{uuid.uuid4()}")
 
-    @inheritable_thread_target(spark)
     def _twin() -> DataFrame:
         batch = materialize(twin())
         batch.count()
         return batch
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        future = pool.submit(_twin)
+    def _triggers() -> DataFrame:
         apply(source.filter(F.col(split) % 2 == 0), 0)
         apply(source.filter(F.col(split) % 2 == 1), 1)
-        streamed = read(out_dir)
-        batch = future.result()
+        return read(out_dir)
+
+    done = run_concurrent(
+        spark, [("twin", _twin), ("triggers", _triggers)], max_parallel=2
+    )
+    batch, streamed = done["twin"], done["triggers"]
 
     def side(df: DataFrame, tag: str) -> DataFrame:
         return df.select(

@@ -73,6 +73,45 @@ def test_run_concurrent_and_timer(spark):
     assert timer.report()["extract"] > 0
 
 
+def test_run_concurrent_isolates_inherits_and_orders(spark):
+    """Each job starts from its own copy of the caller's local properties
+    (what one job sets, the other never reads; both see the caller's job
+    description), and results come back in job order, not finish order."""
+    import threading
+    import time
+
+    sc = spark.sparkContext
+    met = threading.Barrier(2)
+
+    def job(tag: str, linger: float):
+        def fn():
+            sc.setLocalProperty("test.run_concurrent.tag", tag)
+            met.wait(timeout=60)
+            seen = (
+                sc.getLocalProperty("test.run_concurrent.tag"),
+                sc.getLocalProperty("spark.job.description"),
+            )
+            time.sleep(linger)
+            return seen
+
+        return fn
+
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("run_concurrent caller")
+    try:
+        results = run_concurrent(
+            spark, [("first", job("first", 0.5)), ("second", job("second", 0))], max_parallel=2
+        )
+    finally:
+        sc.setLocalProperty("spark.job.description", prior)
+    assert {name: tag for name, (tag, _) in results.items()} == {
+        "first": "first",
+        "second": "second",
+    }
+    assert [desc for _, desc in results.values()] == ["run_concurrent caller"] * 2
+    assert list(results) == ["first", "second"]
+
+
 def test_jdbc_load_plan_ordering():
     from mysql2psql_spark.sinks.jdbc_sink import load_statement_plan, psql_url
 
