@@ -117,29 +117,26 @@ def _minhash_tables(
     round-robin sort) so doc-keyed consumers keep their clustering.
     Default None keeps the session width."""
     r = k // bands
+    # SQL text: one py4j round trip per output column, where a Column
+    # tree costs one per node (k min-aggregates of four nodes each)
     agg = shingle_df.groupBy(id_col).agg(
-        F.sort_array(F.collect_set(hash_col)).alias("arr"),
+        F.expr(f"sort_array(collect_set({hash_col})) AS arr"),
         # per-band keys hash their r signature columns directly
         # (xxhash64 is variadic) — no intermediate array build + slice,
         # which bloats the codegen'd expression tree and measurably
         # inflates the plan's one-time Janino compile (~3 s of the cold
         # run at sf0.1 before this shape).
-        *[F.min(F.xxhash64(F.lit(i), F.col(hash_col))).alias(f"h{i}") for i in range(k)],
-    ).withColumn("n", F.size("arr"))
+        *[F.expr(f"min(xxhash64({i}, {hash_col})) AS h{i}") for i in range(k)],
+    ).withColumn("n", F.expr("size(arr)"))
     if n_parts is not None:
         agg = agg.repartition(n_parts, id_col)
     arrs = _materialize(agg)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(*[F.col(f"h{j * r + i}") for i in range(r)]).alias("key"),
-            )
-            for j in range(bands)
-        ]
+    band_structs = ", ".join(
+        f"struct({j} AS band, xxhash64({', '.join(f'h{j * r + i}' for i in range(r))}) AS key)"
+        for j in range(bands)
     )
-    buckets = arrs.select(F.col(id_col), F.explode(band_structs).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    buckets = arrs.selectExpr(id_col, f"explode(array({band_structs})) AS bk").selectExpr(
+        id_col, "bk.band AS band", "bk.key AS key"
     )
     return arrs, buckets
 
@@ -215,23 +212,22 @@ def exact_jaccard_verify(
     an id colliding across the two corpora cannot silently duplicate the
     verify rows the way a unioned table would."""
     t_num, t_den = _t_frac(threshold)
-    arr_a = arrs.select(
-        F.col(id_col).alias("doc_a"), F.col("arr").alias("arr_a"), F.col("n").alias("na")
+    arr_a = arrs.selectExpr(f"{id_col} AS doc_a", "arr AS arr_a", "n AS na")
+    arr_b = (arrs_b if arrs_b is not None else arrs).selectExpr(
+        f"{id_col} AS doc_b", "arr AS arr_b", "n AS nb"
     )
-    arr_b = (arrs_b if arrs_b is not None else arrs).select(
-        F.col(id_col).alias("doc_b"), F.col("arr").alias("arr_b"), F.col("n").alias("nb")
-    )
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    union = F.col("na") + F.col("nb") - inter
-    jac = inter.cast("double") / union
+    inter = "size(array_intersect(arr_a, arr_b))"
+    union = f"(na + nb - {inter})"
     # inter/union >= t evaluated as integers: exact at the boundary where
     # the float quotient can land on either side of t's double image.
     return (
         cand.select("doc_a", "doc_b")
         .join(arr_a, "doc_a")
         .join(arr_b, "doc_b")
-        .filter(inter * F.lit(t_den) >= F.lit(t_num) * union)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+        .filter(f"{inter} * {t_den} >= {t_num} * {union}")
+        .selectExpr(
+            "doc_a", "doc_b", f"round(CAST({inter} AS DOUBLE) / {union}, 6) AS jaccard"
+        )
     )
 
 
@@ -295,27 +291,16 @@ def minhash_lsh_cross_pairs(
         arrs_c, bk_c = _minhash_tables(sh_corpus, id_col, hash_col, k, bands, n_parts)
         if caches is not None:
             caches.append(arrs_c)
-    n = bk_n.alias("n")
-    c = bk_c.alias("c")
     cand = (
-        n.join(
-            c,
-            (F.col("n.band") == F.col("c.band")) & (F.col("n.key") == F.col("c.key")),
-        )
-        .select(
-            F.col(f"n.{id_col}").alias("doc_a"),
-            F.col(f"c.{id_col}").alias("doc_b"),
-        )
+        bk_n.alias("n")
+        .join(bk_c.alias("c"), F.expr("n.band = c.band AND n.key = c.key"))
+        .selectExpr(f"n.{id_col} AS doc_a", f"c.{id_col} AS doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
     verified = exact_jaccard_verify(
         cand, arrs_n, id_col, threshold, arrs_b=arrs_c
     )
-    return verified.select(
-        F.col("doc_a").alias("doc_new"),
-        F.col("doc_b").alias("doc_corpus"),
-        "jaccard",
-    )
+    return verified.selectExpr("doc_a AS doc_new", "doc_b AS doc_corpus", "jaccard")
 
 
 def prefix_filter_pairs(

@@ -202,27 +202,22 @@ def ks_tail(
     only seen one period yields ks_num = 0 for every key (the empty
     side's ECDF is identically zero) — a defined partial, not an
     error."""
-    from pyspark.sql.window import Window as W
-
+    # SQL text: one parsed expression per output column
     vc = counts.groupBy(key_col, value_col).agg(
-        F.sum(F.when(F.col("period") == 0, F.col("n")).otherwise(0))
-        .cast("bigint")
-        .alias("ca"),
-        F.sum(F.when(F.col("period") == 1, F.col("n")).otherwise(0))
-        .cast("bigint")
-        .alias("cb"),
+        F.expr("CAST(sum(CASE WHEN period = 0 THEN n ELSE 0 END) AS BIGINT) AS ca"),
+        F.expr("CAST(sum(CASE WHEN period = 1 THEN n ELSE 0 END) AS BIGINT) AS cb"),
     )
-    wcum = W.partitionBy(key_col).orderBy(value_col)
-    wall = W.partitionBy(key_col)
-    dec = "decimal(38,0)"
-    cum = vc.select(
+    wcum = f"OVER (PARTITION BY {key_col} ORDER BY {value_col})"
+    wall = f"OVER (PARTITION BY {key_col})"
+    dec = "DECIMAL(38,0)"
+    cum = vc.selectExpr(
         key_col,
         value_col,
-        F.sum("ca").over(wcum).cast(dec).alias("cum_a"),
-        F.sum("cb").over(wcum).cast(dec).alias("cum_b"),
-        F.sum("ca").over(wall).cast(dec).alias("n_a"),
-        F.sum("cb").over(wall).cast(dec).alias("n_b"),
-        F.count("*").over(wall).cast("bigint").alias("n_values"),
+        f"CAST(sum(ca) {wcum} AS {dec}) AS cum_a",
+        f"CAST(sum(cb) {wcum} AS {dec}) AS cum_b",
+        f"CAST(sum(ca) {wall} AS {dec}) AS n_a",
+        f"CAST(sum(cb) {wall} AS {dec}) AS n_b",
+        f"CAST(count(*) {wall} AS BIGINT) AS n_values",
     )
     # |cum_a*n_b - cum_b*n_a| is exact in decimal(38,0); the bigint cast
     # is exact while it fits and must RAISE beyond (r16, ADVICE): under
@@ -231,41 +226,28 @@ def ks_tail(
     # largest NON-overflowed diff — understating ks_num instead of
     # failing. Reachable only past n_a*n_b >= 2^63 (~3e9 rows per side
     # per key); such a deployment should KS a quantile sketch instead.
-    diff_dec = F.abs(
-        F.col("cum_a") * F.col("n_b") - F.col("cum_b") * F.col("n_a")
+    diff_dec = "abs(cum_a * n_b - cum_b * n_a)"
+    overflow = (
+        "raise_error(concat('ks_tail: |cum_a*n_b - cum_b*n_a| overflows bigint "
+        f"(n_a*n_b >= 2^63) for key ', CAST({key_col} AS STRING),"
+        " ' — KS a per-key quantile sketch at this scale'))"
     )
-    max_long = F.lit("9223372036854775807").cast(dec)
-    d = cum.select(
+    d = cum.selectExpr(
         key_col,
         value_col,
-        F.col("n_a").cast("bigint").alias("n_a"),
-        F.col("n_b").cast("bigint").alias("n_b"),
+        "CAST(n_a AS BIGINT) AS n_a",
+        "CAST(n_b AS BIGINT) AS n_b",
         "n_values",
-        F.when(diff_dec <= max_long, diff_dec.cast("bigint"))
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "ks_tail: |cum_a*n_b - cum_b*n_a| overflows bigint "
-                        "(n_a*n_b >= 2^63) for key "
-                    ),
-                    F.col(key_col).cast("string"),
-                    F.lit(" — KS a per-key quantile sketch at this scale"),
-                )
-            ).cast("bigint")
-        )
-        .alias("diff"),
+        f"CASE WHEN {diff_dec} <= CAST('9223372036854775807' AS {dec})"
+        f" THEN CAST({diff_dec} AS BIGINT) ELSE CAST({overflow} AS BIGINT) END AS diff",
     )
-    warg = W.partitionBy(key_col).orderBy(F.col("diff").desc(), value_col)
     return (
-        d.withColumn("rn", F.row_number().over(warg))
-        .filter(F.col("rn") == 1)
-        .select(
-            key_col,
-            "n_a",
-            "n_b",
-            "n_values",
-            F.col("diff").alias("ks_num"),
-            F.col(value_col).alias("ks_at_value"),
+        d.withColumn(
+            "rn",
+            F.expr(f"row_number() OVER (PARTITION BY {key_col} ORDER BY diff DESC, {value_col})"),
+        )
+        .filter("rn = 1")
+        .selectExpr(
+            key_col, "n_a", "n_b", "n_values", "diff AS ks_num", f"{value_col} AS ks_at_value"
         )
     )

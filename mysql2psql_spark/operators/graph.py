@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mysql2psql_spark.sizing import rows_width
+from mysql2psql_spark.sources.local import sql_literal
 
 # 1e-9 contribution grain: fine enough that 3-iteration ranks are
 # stable, exact as BIGINT up to rank sums of ~9e9 (2^63 / 1e9).
@@ -116,7 +117,6 @@ def pagerank(
     ``spark.catalog.clearCache()`` (the bench/driver per-query pattern)
     or session end.
     """
-    from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
     # out-degree is a static edge attribute: attach it ONCE and persist
@@ -144,41 +144,31 @@ def pagerank(
     # that know the edge count pass its row width (sizing.rows_width);
     # None keeps the session width. Ranks are exact integer sums, so
     # partitioning never changes a value.
-    w = Window.partitionBy("src")
     if n_parts is not None:
         edges = edges.repartition(n_parts, "src")
     else:
         edges = edges.repartition("src")
     if dedup_edges:
         edges = edges.dropDuplicates(["src", "dst"])
-    edges = edges.withColumn("deg", F.count(F.lit(1)).over(w)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    edges = edges.withColumn(
+        "deg", F.expr("count(1) OVER (PARTITION BY src)")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     if caches is not None:
         caches.append(edges)
-    ranks = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("rank", F.lit(1.0))
-    )
-    teleport = F.lit(round(1.0 - damping, 6))
-    scale = F.lit(float(_SCALE))
+    ranks = edges.selectExpr("src AS node").distinct().withColumn("rank", F.expr("1.0D"))
+    # SQL text with DOUBLE literals (a bare 0.15 would parse as a DECIMAL)
+    teleport = sql_literal(round(1.0 - damping, 6))
+    damp = sql_literal(float(damping))
+    scale = sql_literal(float(_SCALE))
     for i in range(iters):
-        contrib = (
-            edges.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                "dst",
-                F.floor((F.col("rank") / F.col("deg")) * scale).alias("c"),
-            )
+        contrib = edges.join(ranks.withColumnRenamed("node", "src"), "src").selectExpr(
+            "dst", f"floor((`rank` / deg) * {scale}) AS c"
         )
-        nxt = contrib.groupBy(F.col("dst").alias("node")).agg(
-            (
-                F.floor(
-                    (teleport + F.lit(damping) * (F.sum("c").cast("double") / scale))
-                    * scale
-                )
-                / scale
-            ).alias("rank")
+        nxt = contrib.groupBy(F.expr("dst AS node")).agg(
+            F.expr(
+                f"floor(({teleport} + {damp} * (CAST(sum(c) AS DOUBLE) / {scale})) * {scale})"
+                f" / {scale} AS `rank`"
+            )
         )
         # Each rank frame has exactly one consumer (the next iteration,
         # or the caller), so no materialization is needed for reuse;
@@ -413,15 +403,12 @@ def label_propagation(
     """
     und = _edges_by_v(edges, caches)
     labels = und.select("v").distinct().withColumn("lbl", F.col("v"))
+    # SQL text: one parsed expression per output column
     for _ in range(rounds):
-        nbr = und.join(
-            labels.select(F.col("v").alias("u"), "lbl"), "u"
-        ).select("v", "lbl")
-        counted = nbr.groupBy("v", "lbl").agg(F.count("*").alias("n"))
+        nbr = und.join(labels.selectExpr("v AS u", "lbl"), "u").select("v", "lbl")
+        counted = nbr.groupBy("v", "lbl").agg(F.expr("count(*) AS n"))
         labels = counted.groupBy("v").agg(
-            F.min_by(
-                "lbl", F.struct((-F.col("n")).alias("n"), F.col("lbl").alias("l"))
-            ).alias("lbl")
+            F.expr("min_by(lbl, struct(-n AS n, lbl AS l)) AS lbl")
         )
     return labels
 

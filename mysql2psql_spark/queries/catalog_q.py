@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from mysql2psql_spark.queries import query
 from mysql2psql_spark.sources import load_table
+from mysql2psql_spark.sources.local import local_frame
 from mysql2psql_spark.sources.parquet import TABLES
 
 _TABLES_IN = ", ".join(f"'{t}'" for t in TABLES)
@@ -34,7 +35,7 @@ _TABLES_IN = ", ".join(f"'{t}'" for t in TABLES)
 )
 def s1_catalog_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(t, len(load_table(spark, sf_dir, t).schema)) for t in TABLES]
-    return spark.createDataFrame(rows, "table_name string, n_columns bigint")
+    return local_frame(spark, rows, "table_name string, n_columns bigint")
 
 
 # S2: column-level catalog scan with ordinal positions — the per-table
@@ -54,7 +55,7 @@ def s2_catalog_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in TABLES
         for i, f in enumerate(load_table(spark, sf_dir, t).schema.fields)
     ]
-    return spark.createDataFrame(rows, "table_name string, column_name string, pos int")
+    return local_frame(spark, rows, "table_name string, column_name string, pos int")
 
 
 # S3-shaped ordered string-agg over the catalog: per-table ordered column
@@ -190,6 +191,6 @@ def s8_catalog_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         table = ir.from_dataframe(t, load_table(spark, sf_dir, t))
         for col in table["columns"].values():
             rows.append((t, col["name"], col["type"]))
-    return spark.createDataFrame(
-        rows, "table_name string, column_name string, ir_type string"
+    return local_frame(
+        spark, rows, "table_name string, column_name string, ir_type string"
     )

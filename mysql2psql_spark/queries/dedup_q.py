@@ -28,6 +28,7 @@ from mysql2psql_spark.plans.orchestration import run_concurrent
 from mysql2psql_spark.queries import query
 from mysql2psql_spark.sizing import DRIVER_ROWS, bytes_width
 from mysql2psql_spark.sources import load_table
+from mysql2psql_spark.sources.local import local_frame
 from mysql2psql_spark.queries.text_q import _SHINGLE_SQL
 
 _JACCARD = """CAST(LEN(LIST_INTERSECT(a.sg, b.sg)) AS DOUBLE)
@@ -1483,7 +1484,8 @@ def dedup_method_agreement(
             )
         ]
         denom = F.col("n_pairs_a") + F.col("n_pairs_b") - F.col("n_both")
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             local,
             "method_a string, method_b string, n_pairs_a bigint, "
             "n_pairs_b bigint, n_both bigint",

@@ -22,6 +22,7 @@ from mysql2psql_spark.operators.text import (
 from mysql2psql_spark.plans.orchestration import run_concurrent
 from mysql2psql_spark.sizing import bytes_width
 from mysql2psql_spark.sources import load_table
+from mysql2psql_spark.sources.local import local_frame
 
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
@@ -2716,7 +2717,8 @@ def text_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
         _word_counts(d),
         parts=bytes_width(spark, f"{sf_dir}/documents.parquet", 4 << 20, 1),
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "merge_rank bigint, left_sym string, right_sym string, pair_count bigint",
     )
@@ -2883,7 +2885,8 @@ def text_bpe_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "both" if ra and rb else ("only_a" if ra else "only_b"),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "left_sym string, right_sym string, rank_a bigint, rank_b bigint,"
         " pair_count_a bigint, pair_count_b bigint, status string",

@@ -10,6 +10,20 @@ multi-executor cluster unchanged:
 - Arrow enabled for every pandas interchange (vectorized UDF path)
 - session timezone pinned to UTC so timestamp semantics are stable across
   engines (the DuckDB oracle is UTC-naive)
+- Python call-site capture off (``spark.python.sql.dataFrameDebugging.enabled``)
+
+Call-site capture is PySpark's DataFrame debugging: it wraps ``F.col`` and
+every method of the classic ``Column`` class in ``_with_origin``, which
+walks the Python stack and sends about six more py4j commands to the JVM
+per call. On the perfbench corpus ops (a warm five-op pass at
+``local[4]``) that was 7,500 of 20,153 Python->JVM commands. PySpark reads
+the switch once per process, on the first wrapped call, so it must be a
+builder default: a later ``spark.conf.set`` is never seen.
+
+The cost: a Spark error raised from a query no longer carries the Python
+call-site "DataFrame" context (the file and line of the Column call that
+built the failing expression). Its message and exception type are
+unchanged.
 """
 
 from __future__ import annotations
@@ -47,6 +61,8 @@ def get_spark(
         # but pinning keeps CLI runs deterministic across Spark upgrades.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no Python call-site capture per Column call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # ContextCleaner reclaims shuffle files / broadcast blocks only

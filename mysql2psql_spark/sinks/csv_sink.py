@@ -77,6 +77,11 @@ def write_reference_csv(df: DataFrame, path: str, single_file: bool = False) -> 
         .option("nullValue", "")
         .option("emptyValue", "''")
         .option("delimiter", ",")
+        # byte-exact strings: the writer trims by default, and the line
+        # separator is pinned so the reader never has to detect it
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .option("lineSep", "\n")
         .csv(path)
     )
     cols = ", ".join(f'"{c}"' for c in df.columns)

@@ -54,6 +54,9 @@ def read_reference_csv(
         .option("nullValue", "")
         .option("multiLine", "true" if multi_line else "false")
         .option("delimiter", ",")
+        # the sink's line separator; left unset, the reader detects it
+        # from the first line break, which may be a quoted \r\n
+        .option("lineSep", "\n")
         .option("mode", "FAILFAST" if strict else "PERMISSIVE")
     )
     return reader.csv(path)

@@ -21,7 +21,6 @@ import os
 import shutil
 import uuid
 from collections.abc import Callable
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 from mysql2psql_spark.operators.layout import session_scratch
 from mysql2psql_spark.operators.materialize import materialize
 from mysql2psql_spark.plans.orchestration import run_concurrent
+from mysql2psql_spark.sources.local import sql_literal
 
 
 def audit_dir(spark: SparkSession, prefix: str, sf_dir: str) -> str:
@@ -107,32 +107,37 @@ def stream_batch_audit(
     )
     batch, streamed = done["twin"], done["triggers"]
 
-    def side(df: DataFrame, tag: str) -> DataFrame:
-        return df.select(
-            *keys,
-            F.lit(True).alias(f"in_{tag}"),
-            *[F.col(v).alias(f"{tag}_{v}") for v in vals],
-        )
-
-    in_s, in_b = F.col("in_s"), F.col("in_b")
-    same = reduce(
-        lambda a, b: a & b, [F.col(f"s_{v}").eqNullSafe(F.col(f"b_{v}")) for v in vals]
+    audit = audit_frame(streamed, batch, keys, vals, count)
+    row = audit.collect()[0]
+    # literals over a one-row range: reading it starts no Python worker,
+    # and its count() is one job (a VALUES table's is two: its scan has
+    # no single-partition guarantee, so the count adds an exchange)
+    return spark.range(1, numPartitions=1).selectExpr(
+        *[f"CAST({sql_literal(row[c])} AS BIGINT) AS {c}" for c in audit.columns]
     )
-    audit = (
+
+
+def audit_frame(
+    streamed: DataFrame, batch: DataFrame, keys: list[str], vals: list[str], count: str
+) -> DataFrame:
+    """The one-row audit of ``streamed`` against ``batch`` (see
+    :func:`stream_batch_audit`), built from SQL text: one parsed
+    expression per output column."""
+
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        return df.selectExpr(*keys, f"true AS in_{tag}", *[f"{v} AS {tag}_{v}" for v in vals])
+
+    same = " AND ".join(f"s_{v} <=> b_{v}" for v in vals)
+    figures = (
+        "CAST(2 AS BIGINT) AS n_triggers",
+        f"count(in_s) AS stream_{count}",
+        f"count(in_b) AS batch_{count}",
+        "count(CASE WHEN in_b IS NULL THEN 1 END) AS only_stream",
+        "count(CASE WHEN in_s IS NULL THEN 1 END) AS only_batch",
+        f"count(CASE WHEN in_s AND in_b AND NOT ({same}) THEN 1 END) AS value_mismatches",
+    )
+    return (
         side(streamed, "s")
         .join(side(batch, "b"), keys, "full_outer")
-        .agg(
-            F.lit(2).cast("bigint").alias("n_triggers"),
-            F.count(in_s).alias(f"stream_{count}"),
-            F.count(in_b).alias(f"batch_{count}"),
-            F.count(F.when(in_b.isNull(), 1)).alias("only_stream"),
-            F.count(F.when(in_s.isNull(), 1)).alias("only_batch"),
-            F.count(F.when(in_s & in_b & ~same, 1)).alias("value_mismatches"),
-        )
-    )
-    row = audit.collect()[0]
-    # literals over a one-row range: unlike createDataFrame of local rows,
-    # reading this frame starts no Python worker
-    return spark.range(1, numPartitions=1).select(
-        *[F.lit(row[c]).cast("bigint").alias(c) for c in audit.columns]
+        .agg(*[F.expr(e) for e in figures])
     )

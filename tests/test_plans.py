@@ -7,11 +7,12 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from mysql2psql_spark.queries import QUERIES
 from mysql2psql_spark.sources import load_table
-from tests.conftest import SF_DIR_ORACLE
+from tests.conftest import SF_DIR, SF_DIR_ORACLE
 
 
 def _plan(df) -> str:
@@ -446,3 +447,42 @@ def test_kmeans_train_plan_constant_across_iterations(spark):
 
     s1, s3 = shape(1), shape(3)
     assert s1 == s3, (len(s1), len(s3))
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s1_catalog_tables",
+        "s2_catalog_columns",
+        "s8_catalog_types",
+        "dedup_method_agreement",
+        "text_bpe_learn",
+        "text_bpe_vocab_drift",
+    ],
+)
+def test_driver_collected_results_are_local_table_scans(spark, name):
+    """Queries that collect a small result and return it as a frame
+    return a LocalTableScan (sources/local.py), not a scan over a Python
+    RDD: an action on it starts no Python worker."""
+    plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution().executedPlan()
+    assert plan.getClass().getSimpleName() == "LocalTableScanExec", plan.toString()
+
+
+def test_local_frame_round_trips_values(spark):
+    """``local_frame`` returns exactly the rows it was given, typed by its
+    DDL schema: quotes, backslashes and line breaks in strings, 64-bit
+    ints, doubles and NULLs; no rows gives an empty frame."""
+    from mysql2psql_spark.sources.local import local_frame
+
+    rows = [
+        ("it's", 2**40, 0.1, None),
+        ("back\\slash \\' \\n", -1, 1e-300, 3),
+        ("line\r\nbreak, é", 0, -2.5, None),
+    ]
+    schema = "s string, n bigint, d double, k int"
+    df = local_frame(spark, rows, schema)
+    assert df.schema.simpleString() == "struct<s:string,n:bigint,d:double,k:int>"
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_frame(spark, [], schema)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == df.schema.simpleString()

@@ -200,6 +200,33 @@ def test_csv_source_permissive_quarantines_bad_rows(spark, tmp_path):
         read_reference_csv(spark, str(p), schema, strict=True).collect()
 
 
+def test_csv_roundtrip_keeps_padding(spark, tmp_path):
+    """Leading and trailing blanks survive sink -> source byte-exact (the
+    CSV writer trims them unless told not to)."""
+    from mysql2psql_spark.sources.csv_source import read_reference_csv
+
+    vals = ["  padded  ", " lead", "trail ", "  ", "x"]
+    df = spark.createDataFrame(list(enumerate(vals)), "id int, s string")
+    path = str(tmp_path / "padded")
+    write_reference_csv(df, path, single_file=True)
+    got = dict(read_reference_csv(spark, path, df.schema).collect())
+    assert got == dict(enumerate(vals))
+
+
+def test_csv_roundtrip_quoted_crlf_first_line_break(spark, tmp_path):
+    """A quoted ``\r\n`` that is the file's first line break reads back
+    byte-exact: the line separator is pinned on both sides, not detected
+    from the first line."""
+    from mysql2psql_spark.sources.csv_source import read_reference_csv
+
+    vals = ["a\r\nb", "c\nd", "e,f", "plain"]
+    df = spark.createDataFrame(list(enumerate(vals)), "id int, s string")
+    path = str(tmp_path / "crlf")
+    write_reference_csv(df, path, single_file=True)
+    got = dict(read_reference_csv(spark, path, df.schema).collect())
+    assert got == dict(enumerate(vals))
+
+
 def test_jsonl_roundtrip_hostile_text(spark, tmp_path):
     """JSONL must roundtrip text the CSV dialect cannot hold in one
     line: embedded newlines, quotes, commas, unicode, and backslashes —
